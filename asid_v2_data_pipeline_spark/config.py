@@ -53,7 +53,6 @@ class PipelineConfig:
     encoding: str = "binary"  # {'binary', 'continous'} — misspelling is the API
     noise_method: str = "nersc_"
     batch_size: int = 32
-    shuffle_on_epoch_end: bool = False
     percentage: float = 0.8
     beginning_day_of_year: int = 0
     ending_day_of_year: int = 365

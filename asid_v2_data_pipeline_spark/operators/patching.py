@@ -35,7 +35,7 @@ def tumbling_patch_ids(window: int, line: str = "line", sample: str = "sample"):
 def assign_tumbling(df: DataFrame, window: int) -> DataFrame:
     """Tag each pixel row with its (i, j) tumbling patch id.  No shuffle."""
     i, j = tumbling_patch_ids(window)
-    return df.withColumn("i", i).withColumn("j", j)
+    return df.withColumns({"i": i, "j": j})
 
 
 def assign_sliding(
@@ -94,24 +94,12 @@ def clean_patches(
     return agg.filter(pred).select(*keys)
 
 
-def patch_pixels(
-    patched: DataFrame,
-    window: int,
-    value_cols: list[str],
-    stride: int | None = None,
-    clean_keys: DataFrame | None = None,
-) -> DataFrame:
-    """Pixels of surviving patches with patch-local coordinates.
-
-    ``prow/pcol`` are the within-patch offsets (0..window-1).  For tumbling,
-    ``prow = line - i*window``; for sliding pass ``stride``.  Pass
-    ``clean_keys`` to reuse an already-computed F3 result.
-    """
-    s = stride if stride is not None else window
-    clean = clean_keys if clean_keys is not None else clean_patches(patched, window, value_cols)
-    out = patched.join(clean, ["scene", "i", "j"], "left_semi")
-    return out.withColumn("prow", F.col("line") - F.col("i") * s).withColumn(
-        "pcol", F.col("sample") - F.col("j") * s
+def patch_pixels(patched: DataFrame, window: int, value_cols: list[str]) -> DataFrame:
+    """Pixels of tumbling-window patches that survive F3, with patch-local
+    coordinates ``prow = line - i*window`` and ``pcol`` (0..window-1)."""
+    out = patched.join(clean_patches(patched, window, value_cols), ["scene", "i", "j"], "left_semi")
+    return out.withColumns(
+        {"prow": F.col("line") - F.col("i") * window, "pcol": F.col("sample") - F.col("j") * window}
     )
 
 

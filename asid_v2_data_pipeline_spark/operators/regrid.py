@@ -102,27 +102,28 @@ def bilinear_regrid(
             & (F.col("tsample") >= F.col("s_c1"))
         )
     )
-    t = t.withColumn("wl", (F.col("tline") - F.col("l_c")) / (F.col("l_c1") - F.col("l_c")))
-    t = t.withColumn("ws", (F.col("tsample") - F.col("s_c")) / (F.col("s_c1") - F.col("s_c")))
-
-    # 4 corners per target point
+    # 4 corners per target point, (dl, ds) in (0,0), (0,1), (1,0), (1,1)
+    # order; axis weight of the lower corner is 1 - w, of the upper w
     corners = t.select(
         "scene",
         "ti",
         "tj",
-        "wl",
-        "ws",
-        F.explode(F.array(F.lit(0), F.lit(1))).alias("dl"),
         F.col("l_k"),
         F.col("s_k"),
-    ).withColumn("ds", F.explode(F.array(F.lit(0), F.lit(1))))
-    corners = corners.withColumn("aline", F.col("l_k") + F.col("dl")).withColumn(
-        "asample", F.col("s_k") + F.col("ds")
+        ((F.col("tline") - F.col("l_c")) / (F.col("l_c1") - F.col("l_c"))).alias("wl"),
+        ((F.col("tsample") - F.col("s_c")) / (F.col("s_c1") - F.col("s_c"))).alias("ws"),
+        F.expr("stack(4, 0, 0, 0, 1, 1, 0, 1, 1)").alias("dl", "ds"),
     )
-    corners = corners.withColumn(
-        "w",
-        F.when(F.col("dl") == 0, 1 - F.col("wl")).otherwise(F.col("wl"))
-        * F.when(F.col("ds") == 0, 1 - F.col("ws")).otherwise(F.col("ws")),
+    corners = corners.select(
+        "scene",
+        "ti",
+        "tj",
+        (F.col("l_k") + F.col("dl")).alias("aline"),
+        (F.col("s_k") + F.col("ds")).alias("asample"),
+        (
+            F.when(F.col("dl") == 0, 1 - F.col("wl")).otherwise(F.col("wl"))
+            * F.when(F.col("ds") == 0, 1 - F.col("ws")).otherwise(F.col("ws"))
+        ).alias("w"),
     )
 
     # corners is target-grid-sized (big); the coarse values are

@@ -25,7 +25,6 @@ from ..operators.patching import (
     assign_sliding,
     assign_tumbling,
     clean_patches,
-    patch_pixels,
 )
 from ..operators.regrid import bilinear_regrid, target_points
 
@@ -73,6 +72,10 @@ def build_patches(
 
     sar = sar_px.join(ok_scenes, "scene", "left_semi")
     ice = icechart_px.join(ok_scenes, "scene", "left_semi")
+    # SAR extent per scene: sliding patch bounds and the regrid's targets
+    dims = sar.groupBy("scene").agg(
+        (F.max("line") + 1).alias("height"), (F.max("sample") + 1).alias("width")
+    )
 
     # J1 decode
     decoded = decode_icechart(ice, codes, cfg)
@@ -82,31 +85,24 @@ def build_patches(
         sar_t = assign_tumbling(sar, w)
         out_t = assign_tumbling(decoded, w)
     else:
-        sdims = sar.groupBy("scene").agg(
-            (F.max("line") + 1).alias("_h"), (F.max("sample") + 1).alias("_w")
-        )
+        sdims = F.broadcast(dims)
         sar_t = assign_sliding(
-            sar.join(F.broadcast(sdims), "scene"), w, stride, F.col("_h"), F.col("_w")
-        ).drop("_h", "_w")
+            sar.join(sdims, "scene"), w, stride, F.col("height"), F.col("width")
+        ).drop("height", "width")
         out_t = assign_sliding(
-            decoded.join(F.broadcast(sdims), "scene"), w, stride, F.col("_h"), F.col("_w")
-        ).drop("_h", "_w")
+            decoded.join(sdims, "scene"), w, stride, F.col("height"), F.col("width")
+        ).drop("height", "width")
 
     sar_keys = clean_patches(sar_t, w, ["sar_primary", "sar_secondary"])
     out_keys = clean_patches(out_t, w, ["oh0", "oh1", "oh2", "oh3"])
 
     # J4 regrid (AMSR2 on its own window grid = w / resample_step)
-    dims = sar.groupBy("scene").agg(
-        (F.max("line") + 1).alias("height"), (F.max("sample") + 1).alias("width")
-    )
     spark = sar_px.sparkSession
     tgt = target_points(spark, dims, cfg.resample_step_amsr2)
     regridded = bilinear_regrid(amsr2_px.join(ok_scenes, "scene", "left_semi"), tgt)
     w2 = cfg.window_amsr2
     s2 = cfg.stride_amsr2
-    amsr_t = regridded.withColumnRenamed("ti", "line").withColumnRenamed(
-        "tj", "sample"
-    )
+    amsr_t = regridded.withColumnsRenamed({"ti": "line", "tj": "sample"})
     if tumbling:
         amsr_t = assign_tumbling(amsr_t, w2)
     else:
@@ -131,53 +127,33 @@ def build_patches(
         .select("scene", "i", "j")
     )
 
-    # J2 alignment across variable groups
+    # J2 alignment across variable groups; the aligned keys are a subset of
+    # every group's clean keys, so one semi-join per group keeps its patches
     aligned = align_variables(sar_keys, out_keys, amsr_pivot)
 
-    # materialize long-form patch pixels for every variable
-    sar_long = (
-        patch_pixels(
-            sar_t, w, ["sar_primary", "sar_secondary"], stride=stride, clean_keys=sar_keys
+    # long-form patch pixels (scene, i, j, var, value, prow, pcol) per group
+    def long_form(patched: DataFrame, s: int, *var_value: str) -> DataFrame:
+        return patched.join(aligned, ["scene", "i", "j"], "left_semi").selectExpr(
+            "scene", "i", "j", *var_value, f"line - i * {s} as prow", f"sample - j * {s} as pcol"
         )
-        .join(aligned, ["scene", "i", "j"], "left_semi")
-        .selectExpr(
-            "scene",
-            "i",
-            "j",
-            "prow",
-            "pcol",
-            "stack(2, 'nersc_sar_primary', sar_primary, 'nersc_sar_secondary', sar_secondary) as (var, value)",
-        )
+
+    sar_long = long_form(
+        sar_t,
+        stride,
+        "stack(2, 'nersc_sar_primary', sar_primary, 'nersc_sar_secondary', sar_secondary)"
+        " as (var, value)",
     )
-    out_long = (
-        patch_pixels(out_t, w, ["oh0", "oh1", "oh2", "oh3"], stride=stride, clean_keys=out_keys)
-        .join(aligned, ["scene", "i", "j"], "left_semi")
-        .selectExpr(
-            "scene",
-            "i",
-            "j",
-            "prow",
-            "pcol",
-            "stack(4, 'ice_type_0', oh0, 'ice_type_1', oh1, 'ice_type_2', oh2, 'ice_type_3', oh3) as (var, value)",
-        )
+    out_long = long_form(
+        out_t,
+        stride,
+        "stack(4, 'ice_type_0', oh0, 'ice_type_1', oh1, 'ice_type_2', oh2, 'ice_type_3', oh3)"
+        " as (var, value)",
     )
-    amsr_long = (
-        amsr_t.join(aligned, ["scene", "i", "j"], "left_semi")
-        .select(
-            "scene",
-            "i",
-            "j",
-            (F.col("line") - F.col("i") * s2).alias("prow"),
-            (F.col("sample") - F.col("j") * s2).alias("pcol"),
-            F.regexp_replace("ch", r"\.", "_").alias("var"),  # C8
-            F.col("value"),
-        )
-    )
-    cols = ["scene", "i", "j", "var", "prow", "pcol", "value"]
+    amsr_long = long_form(amsr_t, s2, r"regexp_replace(ch, '\\.', '_') as var", "value")  # C8
     return (
-        sar_long.select(*cols)
-        .unionByName(out_long.select(*cols))
-        .unionByName(amsr_long.select(*cols))
+        sar_long.unionByName(out_long)
+        .unionByName(amsr_long)
+        .select("scene", "i", "j", "var", "prow", "pcol", "value")
     )
 
 

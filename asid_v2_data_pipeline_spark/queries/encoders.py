@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.encoding import ice_type, one_hot_binary, one_hot_continous
+from ..functions.encoding import ONE_HOT, ice_type, one_hot_binary, one_hot_continous
 from ..schemas import load_table
 
 
@@ -93,92 +93,48 @@ ORDER BY ice_idx ASC NULLS FIRST
 """
 
 
-def _f_sql(idx: int) -> str:
-    """f[idx] accumulation with the strict f[-1] wrap (icetype 0 -> f[2])."""
+def _f_sql(idx: int, strict: bool = True) -> str:
+    """f[idx] accumulation; ``strict`` keeps the f[-1] wrap (icetype 0 -> f[2])."""
     terms = []
     for ci, si in (("ca", "sa"), ("cb", "sb"), ("cc", "sc")):
         it = _it_sql(si)
-        hit = f"({it} = 3 OR {it} = 0)" if idx == 2 else f"{it} = {idx + 1}"
+        if idx == 2:
+            hit = f"({it} = 3 OR {it} = 0)" if strict else f"{it} = 3"
+        else:
+            hit = f"{it} = {idx + 1}"
         terms.append(f"CASE WHEN {ci} <> -9 AND {hit} THEN {ci} ELSE 0 END")
     return "(" + " + ".join(terms) + ")"
 
 
-def _staged_ice_types(d: DataFrame) -> DataFrame:
-    """Materialize ice_type(s*) once per pair — keeps every downstream
-    expression small enough for whole-stage codegen (the fully inlined
-    encoder CASE blows janino's 64 KB method limit and falls back to
-    interpreted eval)."""
-    return d.select(
-        "*",
-        ice_type(F.col("sa")).alias("it_a"),
-        ice_type(F.col("sb")).alias("it_b"),
-        ice_type(F.col("sc")).alias("it_c"),
-    )
-
-
 def c2_one_hot_binary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C2 — one_hot_binary over the derived columns; distribution of the
-    4-vector (sum per component + count per vector).  Staged projections
-    (it_* -> f* -> icetype -> oh*) so each stays codegen-sized."""
-    d = _staged_ice_types(_derived(spark, sf_dir))
-
-    def fterm(ci: str, it: str, idx: int):
-        if idx == 2:
-            hit = (F.col(it) == 3) | (F.col(it) == 0)  # strict f[-1] wrap
-        else:
-            hit = F.col(it) == idx + 1
-        return F.when((F.col(ci) != -9) & hit, F.col(ci)).otherwise(F.lit(0))
-
-    pairs = [("ca", "it_a"), ("cb", "it_b"), ("cc", "it_c")]
-    d = d.select(
-        "ct",
-        "it_a",
-        *[
-            sum(
-                (fterm(ci, it, k) for ci, it in pairs[1:]),
-                fterm(*pairs[0], k),
-            ).alias(f"f{k}")
-            for k in range(3)
-        ],
-    )
-    m = F.greatest("f0", "f1", "f2")
-    d = d.select(
-        "ct",
-        F.when(m == 0, F.col("it_a"))
-        .otherwise(
-            F.when(F.col("f0") == m, 1).when(F.col("f1") == m, 2).otherwise(3)
-        )
-        .alias("icetype"),
-    )
-    sel = d.select(
-        *[
-            F.when(F.col("ct") < 10, F.lit(1 if k == 0 else 0))
-            .otherwise(F.when(F.col("icetype") == k, 1).otherwise(0))
-            .cast("int")
-            .alias(f"oh{k}")
-            for k in range(4)
-        ]
-    )
+    4-vector (sum per component + count per vector)."""
     return (
-        sel.groupBy("oh0", "oh1", "oh2", "oh3")
+        one_hot_binary(_derived(spark, sf_dir))
+        .groupBy(*ONE_HOT)
         .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy("oh0", "oh1", "oh2", "oh3")
+        .orderBy(*ONE_HOT)
     )
 
 
-def _c2_sql() -> str:
-    f0, f1, f2 = _f_sql(0), _f_sql(1), _f_sql(2)
+def binary_sql(strict: bool = True) -> list[str]:
+    """The oracle's one_hot_binary: SQL for oh0..oh3 over ct, ca..sc."""
+    f0, f1, f2 = (_f_sql(k, strict) for k in range(3))
     it_sa = _it_sql("sa")
     icetype = (
         f"(CASE WHEN GREATEST({f0}, {f1}, {f2}) = 0 THEN {it_sa} "
         f"ELSE (CASE WHEN {f0} = GREATEST({f0}, {f1}, {f2}) THEN 1 "
         f"WHEN {f1} = GREATEST({f0}, {f1}, {f2}) THEN 2 ELSE 3 END) END)"
     )
-    ohs = ", ".join(
+    return [
         f"(CASE WHEN ct < 10 THEN {1 if k == 0 else 0} "
-        f"ELSE (CASE WHEN {icetype} = {k} THEN 1 ELSE 0 END) END) AS oh{k}"
+        f"ELSE (CASE WHEN {icetype} = {k} THEN 1 ELSE 0 END) END)"
         for k in range(4)
-    )
+    ]
+
+
+def _c2_sql() -> str:
+    ohs = ", ".join(f"{oh} AS oh{k}" for k, oh in enumerate(binary_sql()))
     return _DERIVED_CTE + f"""
 , enc AS (SELECT {ohs} FROM d)
 SELECT oh0, oh1, oh2, oh3, COUNT(*) AS n
@@ -188,37 +144,9 @@ FROM enc GROUP BY 1, 2, 3, 4 ORDER BY oh0, oh1, oh2, oh3
 
 def c3_one_hot_continous(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C3 — one_hot_continous; per-component rounded sums (value-level
-    check across all rows) + row count.  Staged like C2."""
-    d = _staged_ice_types(_derived(spark, sf_dir))
-    pairs = [("ca", "it_a"), ("cb", "it_b"), ("cc", "it_c")]
-
-    def acc(k: int):
-        terms = [
-            F.when(
-                (F.col(ci) != -9) & (F.col(it) == k), F.col(ci) / F.lit(100.0)
-            ).otherwise(F.lit(0.0))
-            for ci, it in pairs
-        ]
-        return terms[0] + terms[1] + terms[2]
-
-    d = d.select("ct", "it_a", *[acc(k).alias(f"a{k}") for k in range(4)])
-    allzero = F.greatest("a0", "a1", "a2", "a3") == 0
-    ctf = F.col("ct") / F.lit(100.0)
-    r0 = F.when(
-        allzero, F.when(F.col("it_a") == 0, ctf).otherwise(F.lit(1.0) - ctf)
-    ).otherwise(F.lit(1.0) - (F.col("a1") + F.col("a2") + F.col("a3")))
-    rest = [
-        F.when(
-            allzero, F.when(F.col("it_a") == k, ctf).otherwise(F.lit(0.0))
-        ).otherwise(F.col(f"a{k}"))
-        for k in (1, 2, 3)
-    ]
-    sel = d.select(
-        r0.cast("double").alias("r0"),
-        *[r.cast("double").alias(f"r{k}") for k, r in zip((1, 2, 3), rest)],
-    )
-    return sel.agg(
-        *[F.round(F.sum(f"r{k}"), 4).alias(f"sum_r{k}") for k in range(4)],
+    check across all rows) + row count."""
+    return one_hot_continous(_derived(spark, sf_dir)).agg(
+        *[F.round(F.sum(oh), 4).alias(f"sum_r{k}") for k, oh in enumerate(ONE_HOT)],
         F.count(F.lit(1)).alias("n"),
     )
 
@@ -232,7 +160,8 @@ def _acc_sql(k: int) -> str:
     return "(" + " + ".join(terms) + ")"
 
 
-def _c3_sql() -> str:
+def continous_sql() -> list[str]:
+    """The oracle's one_hot_continous: SQL for r0..r3 over ct, ca..sc."""
     a = [_acc_sql(k) for k in range(4)]
     allzero = f"GREATEST({a[0]}, {a[1]}, {a[2]}, {a[3]}) = 0"
     it_sa = _it_sql("sa")
@@ -240,12 +169,15 @@ def _c3_sql() -> str:
         f"(CASE WHEN {allzero} THEN (CASE WHEN {it_sa} = 0 THEN ct / 100.0 "
         f"ELSE 1.0 - ct / 100.0 END) ELSE 1.0 - ({a[1]} + {a[2]} + {a[3]}) END)"
     )
-    rs = [r0] + [
+    return [r0] + [
         f"(CASE WHEN {allzero} THEN (CASE WHEN {it_sa} = {k} THEN ct / 100.0 "
         f"ELSE 0.0 END) ELSE {a[k]} END)"
         for k in (1, 2, 3)
     ]
-    sel = ", ".join(f"{r} AS r{k}" for k, r in enumerate(rs))
+
+
+def _c3_sql() -> str:
+    sel = ", ".join(f"{r} AS r{k}" for k, r in enumerate(continous_sql()))
     return _DERIVED_CTE + f"""
 , enc AS (SELECT {sel} FROM d)
 SELECT {', '.join(f'ROUND(SUM(r{k}), 4) AS sum_r{k}' for k in range(4))},

@@ -52,6 +52,17 @@ def get_spark(
         # read as long and convert at load (schemas.load_table)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
+        # generated-class cache: one scenebench `pipeline` op (build, feed
+        # and apply over 2 scenes of 128²) generates about 160 distinct
+        # classes (80 build, 46 feed, 33 apply).  The stock 100 entries
+        # evicted them between ops, so every op recompiled 190-200 classes
+        # (about 2.5 s); 1000 holds several such ops and the queries
+        # around them.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
+        # the cache is keyed on the source text: with the stage id in the
+        # class name, an AQE re-plan that numbers the same stage
+        # differently misses the cache (10-36 classes per op after warm-up)
+        .config("spark.sql.codegen.useIdInClassName", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         # r13 opt (guide §5): ContextCleaner frees dead checkpoint /
         # broadcast / shuffle state only after the driver JVM happens to

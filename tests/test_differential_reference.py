@@ -90,6 +90,50 @@ def test_one_hot_continous_differential(spark):
         assert got[pid] == pytest.approx(list(exp), abs=1e-9), f"row {r}"
 
 
+def _tie_rows(start: int):
+    """Rows whose per-type sums tie (np.argmax takes the first maximum)."""
+    return [
+        (start, 50, 40, 83, 1, 40, 88, 2, -9, 0, 3),  # f0 == f1
+        (start + 1, 50, 40, 86, 1, 40, 96, 2, 5, 99, 3),  # f1 == f2
+        (start + 2, 50, 30, 81, 1, 30, 90, 2, 30, 95, 3),  # f0 == f1 == f2
+        (start + 3, 50, 20, 0, 1, 20, 97, 2, 0, 94, 3),  # strict wrap: f2 doubled
+    ]
+
+
+@pytest.mark.parametrize(
+    "encoding,strict,seed",
+    [("binary", True, 11), ("binary", False, 12), ("continous", True, 13)],
+)
+def test_encoder_matches_duckdb_oracle(spark, encoding, strict, seed):
+    """Per row, the engine encoder against DuckDB evaluating the oracle's
+    own CASE text (queries.encoders) on the same seeded rows."""
+    import duckdb
+    import pandas as pd
+
+    from asid_v2_data_pipeline_spark.functions.encoding import encode_polygon_codes
+    from asid_v2_data_pipeline_spark.queries.encoders import binary_sql, continous_sql
+    from asid_v2_data_pipeline_spark.schemas import POLYGON_CODES
+
+    rows = _random_code_rows(400, seed=seed)
+    rows += _tie_rows(len(rows))
+    df = spark.createDataFrame([("s", r[0], *r[1:], "I") for r in rows], POLYGON_CODES)
+    got = {
+        r["id"]: [r["oh0"], r["oh1"], r["oh2"], r["oh3"]]
+        for r in encode_polygon_codes(df, encoding, strict=strict).collect()
+    }
+    codes = pd.DataFrame(  # noqa: F841 (read by the DuckDB query below)
+        rows, columns=["id", "ct", "ca", "sa", "fa", "cb", "sb", "fb", "cc", "sc", "fc"]
+    )
+    ohs = binary_sql(strict) if encoding == "binary" else continous_sql()
+    sel = ", ".join(f"{oh} AS oh{k}" for k, oh in enumerate(ohs))
+    exp = {
+        r[0]: list(r[1:]) for r in duckdb.sql(f"SELECT id, {sel} FROM codes").fetchall()
+    }
+    assert got.keys() == exp.keys()
+    for pid in exp:
+        assert got[pid] == pytest.approx(exp[pid], abs=1e-9), f"row {rows[pid]}"
+
+
 @needs_ref
 def test_ice_type_differential(spark):
     from pyspark.sql import functions as F

@@ -74,7 +74,7 @@ def test_patch_path_completes_under_giant_scene(spark):
     w = 16
     t = assign_tumbling(px, w)
     keys = clean_patches(t, w, ["sar_primary"])
-    out = patch_pixels(t, w, ["sar_primary"], clean_keys=keys)
+    out = patch_pixels(t, w, ["sar_primary"])
     per_scene = {
         r["scene"]: r["n"]
         for r in keys.groupBy("scene").agg(F.count(F.lit(1)).alias("n")).collect()
