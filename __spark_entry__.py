@@ -1,8 +1,9 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Entry contract of the scene-pipeline engine (PySpark target).
 
-``entry`` runs the flagship query on sf0.001; ``queries``/``oracle_sql``
-declare every implemented operator from SURVEY.md §2 (+ the §2.11
-large-scale operators) with DuckDB-checkable oracles.
+``entry`` runs a scene-path query on sf0.001; ``queries``/``oracle_sql``
+declare the 50 queries the engine checks against DuckDB oracles: the
+relational shapes of the ledger and id lookups, the grid and encoder
+operators of the scene pipeline, and exact dedup.
 """
 
 from __future__ import annotations
@@ -17,17 +18,16 @@ from asid_v2_data_pipeline_spark.queries import all_oracles, all_queries
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0.
 
-    The end-to-end curation pipeline: quality filter → exact dedup →
-    MinHash near-dup dedup → benchmark decontamination → per-source
-    quota → language mixture, one DataFrame plan (oracle-checked as
-    ``cur_pipeline``)."""
-    from asid_v2_data_pipeline_spark.queries.curation import cur_pipeline
+    The clean-patch step of the scene build: tumbling patches over the
+    64×64 test raster, keeping only patches without a masked pixel
+    (oracle-checked as ``f3_clean_patches``)."""
+    from asid_v2_data_pipeline_spark.queries.grid import f3_clean_patches
 
-    return cur_pipeline(spark, "/root/testdata/sf0.001")
+    return f3_clean_patches(spark, "/root/testdata/sf0.001")
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2."""
+    """One entry per oracle-checked query."""
     return all_queries()
 
 

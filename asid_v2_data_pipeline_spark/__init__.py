@@ -1,21 +1,24 @@
-"""asid_v2_data_pipeline_spark — a PySpark-native analytics engine with the
-query and data-processing capabilities of nansencenter/ASID-v2-data-pipeline.
+"""asid_v2_data_pipeline_spark — the sea-ice scene pipeline of
+nansencenter/ASID-v2-data-pipeline on Spark.
 
-The reference (read-only snapshot at /root/reference/) is a single-node
+The reference (``asip_v2`` of that repository) is a single-node
 NumPy/netCDF ETL + ML-feed pipeline over Arctic sea-ice scenes.  This package
-re-expresses every operator in its inventory (see SURVEY.md §2) as idiomatic
-Spark DataFrame transformations designed for 100 TB scale:
+runs the same per-scene path as Spark DataFrame transformations:
 
-- rasters are long-form pixel tables ``(scene, line, sample, value)`` with
-  SQL NULL as the mask,
-- patch extraction / stitching are pure key arithmetic + groupBy (no data
-  duplication for tumbling windows),
-- the polygon-decode join is a broadcast hash join,
-- the AMSR2→SAR bilinear regrid is a neighbor join + weight arithmetic,
-- the one-hot ice-type encoders are native column expressions (no UDFs),
-- plus the large-scale training-data operators the reference lacks:
-  dedup (exact / MinHash-LSH / SimHash / n-gram Jaccard), similarity search,
-  multimodal column plumbing, and text analysis.
+- incremental ingest: list new ``.nc`` files, anti-join the ledger, decode
+  the scenes (classic netCDF and netCDF-4/HDF5) and commit the ledger
+  (``plans/incremental.py``, ``sources/``);
+- build: clean-patch extraction, one-hot ice-chart decode and the
+  AMSR2→SAR bilinear regrid (``plans/build_pipeline.py``);
+- feed: exact-count train/val split and drop-last batches
+  (``plans/train_pipeline.py``);
+- apply: model prediction per batch and stitching the scene back together
+  (``plans/apply_pipeline.py``).
+
+Rasters are long-form pixel tables ``(scene, line, sample, value)`` with SQL
+NULL as the mask; patch extraction and stitching are key arithmetic +
+groupBy, the polygon decode is a broadcast hash join, and the one-hot
+encoders are native column expressions (no UDFs).
 """
 
 __version__ = "0.1.0"

@@ -20,8 +20,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .resize import any_pool_mask, centered_pads  # noqa: F401 (re-export)
-
 
 def sar_size_mask(
     sar_cols: list[str],

@@ -19,7 +19,6 @@ from pyspark.sql import DataFrame
 from ..config import PipelineConfig
 from ..operators.batching import pivot_patches, predict_batches
 from ..operators.stitch import stitch_full_image
-from ..sources.ledger import write_reconstruction
 
 
 def apply_model(
@@ -39,12 +38,3 @@ def apply_model(
         bug_compatible_size=cfg.strict_reference_semantics,
     )
 
-
-def apply_and_write(
-    patch_px: DataFrame,
-    cfg: PipelineConfig,
-    input_vars: list[str],
-    out_dir: str,
-    model_fn: Callable | None = None,
-) -> None:
-    write_reconstruction(apply_model(patch_px, cfg, input_vars, model_fn), out_dir)

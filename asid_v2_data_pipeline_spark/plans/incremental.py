@@ -4,17 +4,18 @@ of /root/reference/asip_v2/build_dataset.py:20-34:
     list input files -> anti-join ledger (S3) -> decode new scenes (S1)
     -> build pipeline -> patch sink (S6) -> ledger commit (S4)
 
-Batch form of what streaming/ingest.py does with checkpoints; both are
-idempotent per file.
+One call processes every file the ledger has not seen yet, through the
+``binaryFile`` scan and the scene decoder in ``sources/netcdf.py``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
 
 from ..config import PipelineConfig
 from ..sources.ledger import commit, list_files, read_ledger, unprocessed
-from ..sources.netcdf import DecodeFn, decode_netcdf_scene, read_scenes
+from ..sources.netcdf import REJECT_VAR, DecodeFn, decode_netcdf_scene, read_scenes
 
 
 def run_incremental_build(
@@ -24,7 +25,6 @@ def run_incremental_build(
     ledger_path: str,
     cfg: PipelineConfig,
     decode_fn: DecodeFn = decode_netcdf_scene,
-    use_datasource: bool = False,
     on_error: str = "raise",
 ) -> int:
     """Process only files not yet in the ledger; returns #files processed.
@@ -39,14 +39,7 @@ def run_incremental_build(
     but its name still commits to the ledger — TERMINAL, so a poison
     file is skipped on every later run instead of retry-looping the
     incremental build forever.  The default ``"raise"`` keeps the
-    fail-fast contract (crash before commit → retried next run).
-
-    ``use_datasource`` routes the scan through ``format("netcdf")``
-    (``sources/netcdf_datasource.py``): todo names prune at partition
-    PLANNING time, so processed files produce no tasks at all.  The name
-    list crossing the driver is metadata-scale — the same names the
-    ledger commit writes driver-side.  (Kernel injection on this path is
-    the ``decode_fn`` option string, not the callable parameter.)"""
+    fail-fast contract (crash before commit → retried next run)."""
     files = list_files(spark, input_dir)
     ledger = read_ledger(spark, ledger_path)
     todo = unprocessed(files, ledger).cache()
@@ -54,37 +47,16 @@ def run_incremental_build(
     if n == 0:
         return 0
 
-    if use_datasource:
-        if on_error != "raise":
-            raise ValueError(
-                "use_datasource=True is fail-fast only; quarantine "
-                "needs the binaryFile path"
-            )
-        if decode_fn is not decode_netcdf_scene:
-            raise ValueError(
-                "use_datasource=True cannot take a decode_fn callable — "
-                "inject the kernel via the datasource's 'module:callable' "
-                "option string (sources/netcdf_datasource.py) instead"
-            )
-        from ..sources.netcdf_datasource import read_scenes_ds
-
-        names = sorted(r["name"] for r in todo.select("name").collect())
-        px = read_scenes_ds(spark, input_dir, cfg.names_sar, names=names)
-    else:
-        # restrict the binaryFile listing to the todo names BEFORE decode
-        # (broadcast semi-join): already-processed files are never decoded,
-        # and a processed file sharing a scene prefix with a new one can't
-        # re-append its pixels.  No collect / isin literal list in the plan.
-        px = read_scenes(
-            spark, input_dir, cfg.names_sar, decode_fn,
-            names=todo.select("name"), on_error=on_error,
-        )
-        if on_error == "quarantine":
-            from pyspark.sql import functions as F
-
-            from ..sources.netcdf import REJECT_VAR
-
-            px = px.filter(F.col("var") != REJECT_VAR)
+    # restrict the binaryFile listing to the todo names BEFORE decode
+    # (broadcast semi-join): already-processed files are never decoded,
+    # and a processed file sharing a scene prefix with a new one can't
+    # re-append its pixels.  No collect / isin literal list in the plan.
+    px = read_scenes(
+        spark, input_dir, cfg.names_sar, decode_fn,
+        names=todo.select("name"), on_error=on_error,
+    )
+    if on_error == "quarantine":
+        px = px.filter(F.col("var") != REJECT_VAR)
     px.write.mode("append").partitionBy("scene").parquet(out_dir)
     commit(todo, ledger_path)
     todo.unpersist()

@@ -15,39 +15,9 @@ name before hashing).  Portability rules used throughout:
 
 from __future__ import annotations
 
-from . import (
-    _shared,
-    analysis,
-    audio,
-    containers,
-    curation,
-    dedup_sim,
-    encoders,
-    formats,
-    graph,
-    grid,
-    media,
-    relational,
-    temporal,
-    webshards,
-)
+from . import dedup_sim, encoders, grid, relational
 
-_MODULES = (
-    relational,
-    grid,
-    encoders,
-    _shared,
-    dedup_sim,
-    curation,
-    media,
-    graph,
-    audio,
-    analysis,
-    containers,
-    webshards,
-    formats,
-    temporal,
-)
+_MODULES = (relational, grid, encoders, dedup_sim)
 
 
 def all_queries() -> dict:

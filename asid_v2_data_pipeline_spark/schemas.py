@@ -82,33 +82,7 @@ AMSR2_PIXELS = T.StructType(
 
 LEDGER = T.StructType([T.StructField("name", T.StringType(), False)])
 
-# patch table: long form, one row per (scene, i, j, var, pixel)
-PATCH_PIXELS = T.StructType(
-    [
-        T.StructField("scene", T.StringType(), False),
-        T.StructField("i", T.IntegerType(), False),
-        T.StructField("j", T.IntegerType(), False),
-        T.StructField("var", T.StringType(), False),
-        T.StructField("prow", T.IntegerType(), False),
-        T.StructField("pcol", T.IntegerType(), False),
-        T.StructField("value", T.FloatType(), True),
-    ]
-)
-
 # --- driver testdata tables (TESTDATA.md) ------------------------------------
-
-TESTDATA_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
 
 
 def load_table(spark, sf_dir: str, name: str):
@@ -141,12 +115,3 @@ def load_table(spark, sf_dir: str, name: str):
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
 
-
-def load_all(spark, sf_dir: str) -> dict:
-    return {t: load_table(spark, sf_dir, t) for t in TESTDATA_TABLES}
-
-
-def register_views(spark, sf_dir: str) -> None:
-    """Register every testdata table as a temp view for spark.sql()."""
-    for t in TESTDATA_TABLES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)

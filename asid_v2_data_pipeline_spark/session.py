@@ -14,6 +14,7 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+PERIODIC_GC_INTERVAL = "2min"
 
 
 def get_spark(
@@ -64,49 +65,14 @@ def get_spark(
         # differently misses the cache (10-36 classes per op after warm-up)
         .config("spark.sql.codegen.useIdInClassName", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
-        # r13 opt (guide §5): ContextCleaner frees dead checkpoint /
-        # broadcast / shuffle state only after the driver JVM happens to
-        # garbage-collect the owning object; the stock 30min periodic-GC
-        # default lets a long-running session (bench loop, streaming
-        # driver, notebook) pile up superseded localCheckpoint blocks in
-        # the unified memory region — measured: back-to-back
-        # cur_pipeline_v2 passes at sf0.1 degraded 9.0 -> 25.6 s purely
-        # from accumulation.  2min keeps sessions flat; env-tunable for
-        # clusters that prefer the stock cadence.
-        .config(
-            "spark.cleaner.periodicGC.interval",
-            os.environ.get("SPARK_GRAFT_PERIODIC_GC", "2min"),
-        )
+        # ContextCleaner frees dead broadcast / shuffle / checkpoint state
+        # only after the JVM garbage-collects the owning object; the
+        # stock 30min periodic GC lets a long-running session (benchmark
+        # loop, notebook) pile that state up in the unified memory region.
+        # 2min keeps such sessions flat.
+        .config("spark.cleaner.periodicGC.interval", PERIODIC_GC_INTERVAL)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
 
-
-def release_checkpoint(df) -> None:
-    """Eagerly free a SUPERSEDED ``localCheckpoint``'s storage blocks
-    (r13 opt, guide §5 "unpersist when done").
-
-    ContextCleaner reclaims checkpoint blocks only after the driver JVM
-    garbage-collects the owning RDD object, so in a long-running session
-    a pipeline that checkpoints stage after stage (curation chains,
-    PageRank phases) strands every superseded stage's blocks in the
-    unified memory region until some eventual full GC — evicting useful
-    blocks and inflating pauses (measured: cur_pipeline_v2 degraded
-    9.0 -> 25.6 s over 7 back-to-back sf0.1 passes from accumulation
-    alone).  Pipelines call this the moment a checkpoint's every
-    consumer has itself been materialized.
-
-    Safety: a localCheckpoint's blocks are the ONLY copy of its data
-    (lineage is truncated), so releasing one that a live plan still
-    references makes that plan's next action fail LOUDLY with
-    ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND`` — a caller bug is an error,
-    never silent wrong results.  No-op under Spark Connect (no local
-    JVM handle) and on non-checkpoint DataFrames.
-    """
-    try:
-        lp = df._jdf.queryExecution().analyzed()
-        if lp.getClass().getSimpleName() == "LogicalRDD":
-            lp.rdd().unpersist(False)
-    except Exception:
-        pass  # best-effort hygiene: Connect plans / already-released

@@ -1,10 +1,9 @@
 """Dump .explain('formatted') for declared queries to plans/$SPARK_GRAFT_PLANS_TAG/ (default r14).
 
-    python tools/dump_plans.py before q1_pricing_summary cur_pipeline ...
-    python tools/dump_plans.py after --all-headline
+    python tools/dump_plans.py before q1_pricing_summary f3_clean_patches ...
 
-Writes plans/r13/<query>_<tag>.txt (guide §7.2 — the judge checks plan
-claims against these files; AdaptiveSparkPlan shows the initial plan).
+Writes plans/<plans tag>/<query>_<tag>.txt, so a plan claim can be checked
+against the file (AdaptiveSparkPlan shows the initial plan).
 """
 
 from __future__ import annotations
@@ -28,10 +27,6 @@ def main() -> None:
     spark = get_spark(app_name=f"dump-plans-{tag}")
     spark.sparkContext.setLogLevel("ERROR")
     qs = entry.queries()
-    if names == ["--all-headline"]:
-        import bench
-
-        names = list(bench.HEADLINE)
     for name in names:
         df = qs[name](spark, sf_dir)
         txt = df._jdf.queryExecution().explainString(

@@ -1,8 +1,8 @@
-"""Quick in-situ micro-bench for a subset of declared queries, using
-bench.py's methodology (sf0.001 warmup, N count() passes at the target
-SF, median + min) plus the baseline comparison from BENCH_DETAIL.json.
+"""Quick in-situ micro-bench for a subset of declared queries (sf0.001
+warmup, N count() passes at the target SF, median + min) plus the
+baseline comparison from BENCH_DETAIL.json.
 
-    python tools/quick_bench.py cur_pipeline_v2 dd_minhash_lsh [...]
+    python tools/quick_bench.py q1_pricing_summary f3_clean_patches [...]
     SPARK_GRAFT_BENCH_PASSES=3 SPARK_GRAFT_SF_DIR=... python tools/quick_bench.py ...
 """
 
