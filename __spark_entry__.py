@@ -1,10 +1,8 @@
-"""Entry contract of the scene-pipeline engine (PySpark target).
+"""Entry contract of the engine (PySpark target).
 
-``entry`` runs a scene-path query on sf0.001; ``queries``/``oracle_sql``
-declare the 50 queries the engine checks against DuckDB oracles: the
-relational shapes of the ledger and id lookups, the grid and encoder
-operators of the scene pipeline, and exact dedup.
-"""
+``entry`` runs a query of the scene pipeline on sf0.001;
+``queries``/``oracle_sql`` declare every registered query with the
+DuckDB SQL its result is checked against."""
 
 from __future__ import annotations
 
@@ -27,7 +25,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per oracle-checked query."""
+    """One entry per registered query."""
     return all_queries()
 
 

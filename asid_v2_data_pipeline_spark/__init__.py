@@ -19,6 +19,11 @@ Rasters are long-form pixel tables ``(scene, line, sample, value)`` with SQL
 NULL as the mask; patch extraction and stitching are key arithmetic +
 groupBy, the polygon decode is a broadcast hash join, and the one-hot
 encoders are native column expressions (no UDFs).
+
+Outside the scene path the package also carries large-scale training-data
+operators the reference lacks — dedup (exact / MinHash-LSH / SimHash /
+n-gram Jaccard), similarity search, media and container decoders,
+curation, and streaming forms of several of them.
 """
 
 __version__ = "0.1.0"

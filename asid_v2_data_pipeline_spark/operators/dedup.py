@@ -1,10 +1,43 @@
-"""Exact deduplication: keep one deterministic survivor per key."""
+"""Deduplication operators for 100 TB training corpora (SURVEY.md §2.11).
+
+Four tiers, cheapest first:
+
+- **exact**: hash-groupBy on a normalized key — one shuffle, map-side
+  combinable.
+- **MinHash + LSH**: shingle → k permutation-hash minima → band buckets →
+  candidate pairs only within buckets (no all-pairs O(n²) join).  The
+  band-bucket groupBy is the only shuffle; skewed buckets are AQE-split.
+- **SimHash**: 32-bit weighted-sign fingerprint; near-dups = small Hamming
+  distance (bit_count(xor)).
+- **n-gram Jaccard**: exact set similarity via shingle explode +
+  equi-join on shingle — the verifier for MinHash candidates.
+
+All hashing is deterministic integer arithmetic (portable to the DuckDB
+oracle).  MinHash permutations: ``h_i(x) = (a_i·x + b_i) mod p`` with fixed
+odd constants — standard universal hashing.
+"""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from ..functions.text import MASK31, shingles
+
+MERSENNE31 = (1 << 31) - 1
+
+
+def _perm_constants(num_perm: int, seed: int = 7) -> list[tuple[int, int]]:
+    """Deterministic (a, b) pairs via a small LCG (no RNG dependency)."""
+    out, state = [], seed
+    for _ in range(num_perm):
+        state = (state * 1103515245 + 12345) % (1 << 31)
+        a = (state | 1) % MERSENNE31 or 1
+        state = (state * 1103515245 + 12345) % (1 << 31)
+        b = state % MERSENNE31
+        out.append((a, b))
+    return out
 
 
 def exact_dedup(df: DataFrame, key_cols: list[str], order_col: str) -> DataFrame:
@@ -14,3 +47,1061 @@ def exact_dedup(df: DataFrame, key_cols: list[str], order_col: str) -> DataFrame
     prefer this over ``dropDuplicates`` for a deterministic survivor."""
     w = Window.partitionBy(*key_cols).orderBy(order_col)
     return df.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
+
+
+COMBINE = 1000003  # token-hash -> shingle-hash combining multiplier
+
+
+def token_hashes(text: Column) -> Column:
+    """31-poly char hash per token (the only char-level pass)."""
+    from ..functions.text import tokens
+
+    return F.transform(
+        tokens(text),
+        lambda t: F.aggregate(
+            F.split(t, ""),
+            F.lit(0).cast("long"),
+            lambda acc, ch: (acc * 31 + F.ascii(ch)) % F.lit(MASK31 + 1),
+        ),
+    )
+
+
+def _shingle_hashes_from_token_hashes(th: Column, n: int = 3) -> Column:
+    """Distinct shingle hashes combined arithmetically from token hashes:
+    ``sh_i = fold(0, th[i..i+n-1], (a, h) -> (a*COMBINE + h) mod 2^31)``.
+
+    Hashing tokens once and combining beats re-hashing every shingle's
+    characters ~n-fold — at 100 TB the char pass dominates."""
+    k = F.size(th)
+    idx = F.sequence(F.lit(0), F.greatest(k - n, F.lit(0)))
+
+    def shingle_at(i: Column) -> Column:
+        acc = F.lit(0).cast("long")
+        for d in range(n):
+            acc = (acc * COMBINE + F.element_at(th, i + d + 1)) % F.lit(MASK31 + 1)
+        return acc
+
+    full_fold = F.aggregate(
+        th,
+        F.lit(0).cast("long"),
+        lambda acc, h: (acc * COMBINE + h) % F.lit(MASK31 + 1),
+    )
+    return F.when(k >= n, F.array_distinct(F.transform(idx, shingle_at))).otherwise(
+        F.array(full_fold)
+    )
+
+
+def with_shingle_hashes(
+    df: DataFrame, id_col: str, text_col: str, n: int = 3
+) -> DataFrame:
+    """(_id, _hs) — the shingle-hash projection every dedup/decontam
+    pipeline starts from.
+
+    r13 optimization (guide §4.2): computed by the Arrow-vectorized
+    kernel (``functions/arrowhash.py``) — tokenize + char hash + fold
+    fused into ONE JVM→Python crossing per batch, bit-identical to the
+    Catalyst HOF form ``_shingle_hashes_from_token_hashes(token_hashes)``
+    (which stays the documented oracle contract; identity pinned in
+    tests/test_arrowhash.py).  The HOF form is CodegenFallback — every
+    char paid an interpreted expression-tree walk."""
+    from ..functions.arrowhash import shingle_hashes_arrow
+
+    return df.select(
+        F.col(id_col).alias("_id"),
+        shingle_hashes_arrow(F.col(text_col), n).alias("_hs"),
+    )
+
+
+def fingerprint_from_token_hashes(th: Column) -> Column:
+    """``functions.text.fingerprint`` replayed from a token-hash array:
+    the same ``acc*COMBINE + char_hash(token) mod 2^31`` fold, with the
+    per-token char hashes already computed.  Identity with the text
+    form is pinned in tests — use it when a pipeline has paid the
+    char-level pass once (:func:`token_hashes`) and derives
+    fingerprints AND shingle sets from the same array (curate_v2)."""
+    return F.aggregate(
+        th,
+        F.lit(0).cast("long"),
+        lambda acc, h: (acc * COMBINE + h) % F.lit(MASK31 + 1),
+    ).cast("long")
+
+
+def shingle_hashes(text: Column, n: int = 3) -> Column:
+    """Column form of the shingle hash set (inline; prefer
+    ``with_shingle_hashes`` in pipelines).  The token-hash array is bound
+    once via a single-element ``transform`` so the interpreted HOF lambdas
+    reference it as a variable instead of re-hashing per position (see
+    functions.text.shingles)."""
+    return F.element_at(
+        F.transform(
+            F.array(token_hashes(text)),
+            lambda th: _shingle_hashes_from_token_hashes(th, n),
+        ),
+        1,
+    )
+
+
+def _perm_min(hs: Column, a: int, b: int) -> Column:
+    # closure factory: pyspark reads the lambda's arity, so defaults
+    # ("lambda x, a=a") would be mis-bound as lambda variables
+    return F.array_min(F.transform(hs, lambda x: (x * a + b) % F.lit(MERSENNE31)))
+
+
+def minhash_signature(text: Column, num_perm: int = 16, n: int = 3) -> Column:
+    """MinHash signature: array of per-permutation minima over the shingle
+    hash set.
+
+    NOTE: prefer ``minhash_signatures`` (DataFrame form) in pipelines —
+    it materializes the shingle-hash array as a column.  This inline form
+    binds the array once (single-element ``transform``) so the
+    per-permutation minima reference it as a lambda variable instead of
+    re-hashing the document once per permutation."""
+    return F.element_at(
+        F.transform(
+            F.array(shingle_hashes(text, n)),
+            lambda hs: F.array(
+                *[_perm_min(hs, a, b) for a, b in _perm_constants(num_perm)]
+            ),
+        ),
+        1,
+    )
+
+
+def minhash_signatures(
+    df: DataFrame, id_col: str, text_col: str, num_perm: int = 16, n: int = 3
+) -> DataFrame:
+    """(_id, _sig) — signature per row, shingle hashes computed exactly
+    once (staged projections)."""
+    from ..functions.arrowhash import minhash_sig_arrow
+
+    hashed = with_shingle_hashes(df, id_col, text_col, n)
+    return hashed.select(
+        "_id", minhash_sig_arrow(F.col("_hs"), num_perm).alias("_sig")
+    )
+
+
+def _pairs_from_sorted(arr: Column) -> Column:
+    """All ordered pairs (a, b), a before b, from a sorted array — the
+    in-bucket pair expansion of LSH blocking."""
+    return F.flatten(
+        F.transform(
+            arr,
+            lambda a, i: F.transform(
+                F.slice(arr, i + 2, F.size(arr)),
+                lambda b: F.struct(a.alias("_a"), b.alias("_b")),
+            ),
+        )
+    )
+
+
+def band_rows_from_hashes(
+    hashed: DataFrame, num_perm: int = 16, bands: int = 4
+) -> DataFrame:
+    """(_id, _band, _bucket) LSH blocking rows from a pre-hashed
+    (_id, _hs) relation — the shared kernel when one shingle pass feeds
+    several banded consumers (dedup pairs + fuzzy decontam)."""
+    from ..functions.arrowhash import minhash_sig_arrow
+
+    rows = num_perm // bands
+    # r13 (guide §4.2): all num_perm permutation minima in one
+    # vectorized pass instead of num_perm interpreted transform+min
+    # walks over the shingle array (identity pinned in test_arrowhash)
+    sig = hashed.select(
+        "_id", minhash_sig_arrow(F.col("_hs"), num_perm).alias("_sig")
+    )
+    return sig.select(
+        "_id",
+        F.posexplode(
+            F.array(
+                *[
+                    F.aggregate(
+                        F.slice(F.col("_sig"), b * rows + 1, rows),
+                        F.lit(0).cast("long"),
+                        lambda acc, x: (acc * 31 + x) % F.lit(MASK31 + 1),
+                    )
+                    for b in range(bands)
+                ]
+            )
+        ).alias("_band", "_bucket"),
+    )
+
+
+def minhash_band_rows(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    num_perm: int = 16,
+    bands: int = 4,
+    n: int = 3,
+) -> DataFrame:
+    """(_id, _band, _bucket) LSH blocking rows — one per document per
+    band, bucket = fold of the band's signature slice.  This is the
+    relation a persisted dedup INDEX stores (partitioned by band,
+    bucketed by bucket at 100 TB)."""
+    return band_rows_from_hashes(
+        with_shingle_hashes(df, id_col, text_col, n), num_perm, bands
+    )
+
+
+def minhash_lsh_pairs(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    num_perm: int = 16,
+    bands: int = 4,
+    n: int = 3,
+) -> DataFrame:
+    """Candidate near-dup pairs via banded LSH: docs sharing any band bucket.
+
+    Pair generation is groupBy(band, bucket) + collect_list + in-bucket
+    expansion — a SINGLE subtree over the corpus, not a self-join: Spark
+    does not reuse self-join exchanges (measured: the join form hashes
+    every document twice, once per side), so at 100 TB the bucket-collect
+    form halves the dominant cost (shingle hashing).  Per-bucket work is
+    quadratic in bucket size either way — that is LSH's candidate set.
+
+    Shuffle profile: one groupBy on (band, bucket_hash) + one distinct on
+    the pair — candidates only, never all pairs.  Returns distinct
+    (id_a, id_b) with id_a < id_b.
+    """
+    return minhash_lsh_pairs_from_hashes(
+        with_shingle_hashes(df, id_col, text_col, n), num_perm, bands
+    )
+
+
+def minhash_lsh_pairs_from_hashes(
+    hashed: DataFrame, num_perm: int = 16, bands: int = 4
+) -> DataFrame:
+    """``minhash_lsh_pairs`` over a pre-hashed (_id, _hs) relation —
+    use when the shingle pass is shared with other banded consumers
+    (e.g. curate_v2 feeds one checkpointed hash table to BOTH the
+    dedup pairs and the fuzzy decontam tier: one corpus char-hash pass
+    instead of two)."""
+    band_rows = band_rows_from_hashes(hashed, num_perm, bands)
+    buckets = (
+        band_rows.groupBy("_band", "_bucket")
+        .agg(F.array_sort(F.collect_list("_id")).alias("_ids"))
+        .filter(F.size("_ids") >= 2)
+    )
+    return (
+        buckets.select(F.explode(_pairs_from_sorted(F.col("_ids"))).alias("_p"))
+        .select(F.col("_p._a").alias("id_a"), F.col("_p._b").alias("id_b"))
+        .distinct()
+    )
+
+
+def index_candidates(
+    batch_rows: DataFrame, index_rows: DataFrame
+) -> DataFrame:
+    """Incremental dedup: candidate matches of a NEW batch against a
+    persisted signature index (both in `minhash_band_rows` layout).
+
+    The batch side is broadcast — micro-batches are tiny next to the
+    corpus index, so the index is scanned once map-side with NO shuffle
+    (with the index table partitioned by ``_band`` and bucketed by
+    ``_bucket``, the scan additionally prunes to the batch's buckets).
+    Returns distinct (id_new, id_index).
+
+    The ingest cycle: ``cands = index_candidates(batch, index)``;
+    anything in ``cands`` is a duplicate of history — drop or cluster
+    it; then append the surviving batch rows to the index table.
+    """
+    b = batch_rows.select(F.col("_id").alias("id_new"), "_band", "_bucket")
+    i = index_rows.select(F.col("_id").alias("id_index"), "_band", "_bucket")
+    return (
+        F.broadcast(b)
+        .join(i, ["_band", "_bucket"])
+        # a document is never its own duplicate — guards the at-least-once
+        # retry path where a batch's own rows may already be in the index
+        .filter(F.col("id_new") != F.col("id_index"))
+        .select("id_new", "id_index")
+        .distinct()
+    )
+
+
+def _bit_pred(mask: int):
+    # factory, not default-arg lambda: pyspark binds lambda arity
+    return lambda x: x.bitwiseAND(F.lit(mask)) != 0
+
+
+def _simhash_from_hashes(hs: Column, bits: int) -> Column:
+    total = F.size(hs)
+    bit_cols = []
+    for b in range(bits):
+        ones = F.size(F.filter(hs, _bit_pred(1 << b)))
+        bit_cols.append(
+            F.when(ones * 2 > total, F.lit(1 << b)).otherwise(F.lit(0)).cast("long")
+        )
+    out = bit_cols[0]
+    for c in bit_cols[1:]:
+        out = out + c
+    return out
+
+
+def simhash(text: Column, bits: int = 32, n: int = 3) -> Column:
+    """SimHash fingerprint: sign of per-bit votes over the shingle hash set
+    (bit b set iff the majority of shingle hashes have bit b set).
+
+    Column form — prefer ``simhashes`` (DataFrame form) in pipelines.
+    The shingle-hash array is bound once (single-element ``transform``)
+    so the per-bit votes reference it as a lambda variable instead of
+    re-hashing the document once per bit."""
+    return F.element_at(
+        F.transform(
+            F.array(shingle_hashes(text, n)),
+            lambda hs: _simhash_from_hashes(hs, bits),
+        ),
+        1,
+    )
+
+
+def simhashes(
+    df: DataFrame, id_col: str, text_col: str, bits: int = 32, n: int = 3
+) -> DataFrame:
+    """(id, simhash) with the shingle-hash array materialized once."""
+    hashed = with_shingle_hashes(df, id_col, text_col, n)
+    return hashed.select(
+        F.col("_id").alias(id_col), _simhash_from_hashes(F.col("_hs"), bits).alias("simhash")
+    )
+
+
+def hamming(a: Column, b: Column) -> Column:
+    """Hamming distance between two simhash fingerprints."""
+    return F.bit_count(a.bitwiseXOR(b))
+
+
+def simhash_pairs(
+    fingerprints: DataFrame,
+    id_col: str,
+    hash_col: str,
+    bits: int = 32,
+    bands: int = 4,
+    max_hd: int = 3,
+) -> DataFrame:
+    """Near-dup pairs within Hamming distance ``max_hd`` — banded, never
+    all-pairs.
+
+    Pigeonhole recall guarantee: two fingerprints differing in at most
+    ``max_hd`` bits share at least one of ``bands`` equal-width bit chunks
+    whenever ``max_hd < bands`` (the differing bits occupy at most
+    ``max_hd`` chunks).  So the equi-join on ``(band, chunk)`` is EXACT:
+    candidates then verified with the full ``bit_count(xor)``.
+
+    Shuffle profile at 100 TB: one hash exchange on the 4-byte
+    ``(band, chunk)`` key — no BroadcastNestedLoop/cartesian; hot buckets
+    (all-zero chunks of near-empty docs) are AQE-skew-split.
+    """
+    if max_hd >= bands:
+        raise ValueError(
+            f"banding is exact only for max_hd < bands (got {max_hd} >= {bands})"
+        )
+    width = bits // bands
+    fp = fingerprints.select(
+        F.col(id_col).alias("_id"), F.col(hash_col).cast("long").alias("_h")
+    )
+    band_rows = fp.select(
+        "_id",
+        "_h",
+        F.posexplode(
+            F.array(
+                *[
+                    F.shiftright(F.col("_h"), width * b)
+                    .bitwiseAND(F.lit((1 << width) - 1))
+                    .cast("long")
+                    for b in range(bands)
+                ]
+            )
+        ).alias("_band", "_chunk"),
+    )
+    # bucket-collect pair expansion (single subtree — no self-join; see
+    # minhash_lsh_pairs): array_sort on struct(_id, _h) orders by _id
+    buckets = (
+        band_rows.groupBy("_band", "_chunk")
+        .agg(
+            F.array_sort(
+                F.collect_list(F.struct(F.col("_id"), F.col("_h")))
+            ).alias("_ms")
+        )
+        .filter(F.size("_ms") >= 2)
+    )
+    return (
+        buckets.select(F.explode(_pairs_from_sorted(F.col("_ms"))).alias("_p"))
+        .select(
+            F.col("_p._a._id").alias("id_a"),
+            F.col("_p._b._id").alias("id_b"),
+            F.col("_p._a._h").alias("_ha"),
+            F.col("_p._b._h").alias("_hb"),
+        )
+        .distinct()
+        .withColumn("hd", hamming(F.col("_ha"), F.col("_hb")).cast("int"))
+        .filter(F.col("hd") <= max_hd)
+        .select("id_a", "id_b", "hd")
+    )
+
+
+def _naive_pairs_from_staged(staged: DataFrame, threshold: float) -> DataFrame:
+    """Zero-join exact Jaccard pairs from a materialized (_id, _s
+    shingle-array) table: explode with sizes, bucket-collect per shingle,
+    expand in-bucket pairs; the per-pair count IS |A∩B|."""
+    sh = staged.select(
+        "_id", F.size("_s").alias("_sz"), F.explode("_s").alias("_sh")
+    )
+    buckets = (
+        sh.groupBy("_sh")
+        .agg(
+            F.array_sort(
+                F.collect_list(F.struct(F.col("_id"), F.col("_sz")))
+            ).alias("_ms")
+        )
+        .filter(F.size("_ms") >= 2)
+    )
+    inter = (
+        buckets.select(
+            F.explode(_pairs_from_sorted(F.col("_ms"))).alias("_p")
+        )
+        .groupBy(
+            F.col("_p._a._id").alias("id_a"),
+            F.col("_p._b._id").alias("id_b"),
+            F.col("_p._a._sz").alias("_sza"),
+            F.col("_p._b._sz").alias("_szb"),
+        )
+        .agg(F.count(F.lit(1)).alias("_inter"))
+    )
+    return (
+        inter.withColumn(
+            "jaccard",
+            F.col("_inter")
+            / (F.col("_sza") + F.col("_szb") - F.col("_inter")),
+        )
+        .filter(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", "jaccard")
+    )
+
+
+def jaccard_pairs(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    n: int = 3,
+    threshold: float = 0.5,
+    prefix_filter: bool = False,
+    df_cutoff: int | None = None,
+) -> DataFrame:
+    """Exact n-gram Jaccard ≥ threshold pairs.
+
+    With ``prefix_filter`` (PPJoin-style, exact, identical results): two
+    docs with Jaccard ≥ t MUST share a shingle among each one's
+    ``|A| - ceil(t*|A|) + 1`` rarest shingles (ascending document
+    frequency) — candidates come from the prefix self-join, then the full
+    intersection is verified exactly.  On natural (Zipfian-vocabulary)
+    corpora this prunes candidates by orders of magnitude; on corpora
+    where every shingle is frequent (like the synthetic small-vocabulary
+    testdata, measured) the pruning cannot bite and the extra passes make
+    it slower than the naive join — hence opt-in.
+
+    With ``df_cutoff = D`` (exact, identical results): shingles with
+    document frequency > D ("stop-shingles", the DF² blow-up in the
+    candidate join at 100 TB) are excluded from candidate GENERATION for
+    most docs, never from verification.  Why no pair is lost: a missed
+    pair would have ``A∩B`` entirely inside the hot set, but Jaccard ≥ t
+    forces ``|A∩B| ≥ ceil(t·|A|)``, so doc A would need at least that
+    many hot shingles — i.e. both docs are "hot-heavy"
+    (``#hot(A) ≥ ceil(t·|A|)``).  Hot-heavy docs therefore ALSO join on
+    their hot shingles (a small self-join: hot-heaviness is rare on
+    natural corpora); everyone else joins on cold shingles only.  The
+    full intersection is then verified per candidate pair.  The hot set
+    itself has at most ``total_occurrences / D`` members — broadcast.
+    """
+    if prefix_filter and df_cutoff is not None:
+        raise ValueError("prefix_filter and df_cutoff are alternative candidate schemes")
+
+    if df_cutoff is None and not prefix_filter:
+        # naive path, zero joins: explode distinct shingles carrying the
+        # set size, bucket-collect per shingle, expand in-bucket pairs —
+        # each shared shingle yields the pair exactly once, so the
+        # per-pair occurrence count IS |A∩B|.  The corpus is shingled
+        # ONCE (a self-join would do it twice — Spark doesn't reuse
+        # self-join exchanges, measured), and the arrays are
+        # MATERIALIZED before the explode (exploding an expensive array
+        # expression re-evaluates it inside the Generate stage, outside
+        # codegen CSE — 100× measured; see decontam.contamination).
+        # Hot shingles make quadratic in-bucket pair lists — identical
+        # row count to the join form's output; at 100 TB use df_cutoff
+        # to bound them.
+        staged = df.select(
+            F.col(id_col).alias("_id"),
+            F.array_distinct(shingles(F.col(text_col), n)).alias("_s"),
+        ).localCheckpoint()
+        return _naive_pairs_from_staged(staged, threshold)
+
+    # candidate-scheme paths: materialize the per-doc shingle arrays once
+    # (localCheckpoint — at 100 TB this would be a persisted table, the
+    # standard "shingle table" of a dedup pipeline); every downstream use
+    # (DF counts, candidate generation, exact verification) then reads
+    # the materialized arrays instead of re-shingling the corpus.
+    staged = df.select(
+        F.col(id_col).alias("_id"),
+        F.array_distinct(shingles(F.col(text_col), n)).alias("_s"),
+    ).localCheckpoint()
+    sh = staged.select("_id", F.explode("_s").alias("_sh"))
+    sizes = staged.select("_id", F.size("_s").alias("_sz"))
+
+    def _verify(cand: DataFrame) -> DataFrame:
+        # exact verification: array_intersect of the two materialized
+        # shingle sets (two hash joins on id, no shingle re-explosion)
+        sa = staged.select(F.col("_id").alias("id_a"), F.col("_s").alias("_sa"))
+        sb = staged.select(F.col("_id").alias("id_b"), F.col("_s").alias("_sb"))
+        return (
+            cand.join(sa, "id_a")
+            .join(sb, "id_b")
+            .select(
+                "id_a",
+                "id_b",
+                F.size(F.array_intersect(F.col("_sa"), F.col("_sb"))).alias(
+                    "_inter"
+                ),
+            )
+        )
+
+    if df_cutoff is not None:
+        # the hot set is tiny by construction (<= occurrences/df_cutoff)
+        # — materialize it once: the emptiness probe and the broadcast
+        # join below both read the checkpoint instead of re-aggregating
+        hot = (
+            sh.groupBy("_sh")
+            .agg(F.count("*").alias("_df"))
+            .filter(F.col("_df") > df_cutoff)
+            .select("_sh", F.lit(True).alias("_hot"))
+            .localCheckpoint()
+        )
+        if hot.limit(1).count() == 0:
+            # ADAPTIVE: no shingle exceeds the cutoff, so the pruning
+            # cannot bite — the candidate/verify machinery would only
+            # add passes (measured 4× slower on a hot-free corpus).
+            # Same result either way (the scheme is result-preserving),
+            # so take the zero-join path over the same shingle table.
+            return _naive_pairs_from_staged(staged, threshold)
+        flagged = sh.join(F.broadcast(hot), "_sh", "left").withColumn(
+            "_hot", F.coalesce(F.col("_hot"), F.lit(False))
+        )
+        stats = flagged.groupBy("_id").agg(
+            F.count("*").alias("_sz2"),
+            F.sum(F.col("_hot").cast("int")).alias("_nhot"),
+        )
+        heavy = stats.filter(
+            F.col("_nhot") >= F.ceil(F.lit(threshold) * F.col("_sz2"))
+        ).select("_id")
+        gen = flagged.filter(~F.col("_hot")).select("_id", "_sh").unionByName(
+            flagged.filter(F.col("_hot"))
+            .join(heavy, "_id", "left_semi")
+            .select("_id", "_sh")
+        )
+        # bucket-collect pair expansion (single subtree; see minhash)
+        gbuckets = (
+            gen.groupBy("_sh")
+            .agg(F.array_sort(F.collect_list("_id")).alias("_ids"))
+            .filter(F.size("_ids") >= 2)
+        )
+        cand = (
+            gbuckets.select(
+                F.explode(_pairs_from_sorted(F.col("_ids"))).alias("_p")
+            )
+            .select(F.col("_p._a").alias("id_a"), F.col("_p._b").alias("id_b"))
+            .distinct()
+        )
+        inter = _verify(cand)
+    elif prefix_filter:
+        # global order = ascending document frequency (rare shingles
+        # first): prefixes then consist of rare shingles, so the prefix
+        # self-join produces few candidates even on hot-vocabulary corpora
+        df_counts = sh.groupBy("_sh").agg(F.count("*").alias("_df"))
+        ranked = (
+            sh.join(F.broadcast(df_counts), "_sh")
+            .withColumn(
+                "_rk",
+                F.row_number().over(
+                    Window.partitionBy("_id").orderBy("_df", "_sh")
+                ),
+            )
+            .join(sizes, "_id")
+        )
+        # prefix length: |A| - ceil(t*|A|) + 1
+        prefix = ranked.filter(
+            F.col("_rk")
+            <= F.col("_sz") - F.ceil(F.lit(threshold) * F.col("_sz")) + 1
+        ).select("_id", "_sh")
+        # bucket-collect pair expansion (single subtree; see minhash)
+        pbuckets = (
+            prefix.groupBy("_sh")
+            .agg(F.array_sort(F.collect_list("_id")).alias("_ids"))
+            .filter(F.size("_ids") >= 2)
+        )
+        cand = (
+            pbuckets.select(
+                F.explode(_pairs_from_sorted(F.col("_ids"))).alias("_p")
+            )
+            .select(F.col("_p._a").alias("id_a"), F.col("_p._b").alias("id_b"))
+            .distinct()
+        )
+        inter = _verify(cand)
+
+    out = (
+        inter.join(sizes.withColumnRenamed("_id", "id_a").withColumnRenamed("_sz", "_sza"), "id_a")
+        .join(sizes.withColumnRenamed("_id", "id_b").withColumnRenamed("_sz", "_szb"), "id_b")
+        .withColumn(
+            "jaccard",
+            F.col("_inter") / (F.col("_sza") + F.col("_szb") - F.col("_inter")),
+        )
+        .filter(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", "jaccard")
+    )
+    return out
+
+
+def connected_components(
+    pairs: DataFrame,
+    id_a: str = "id_a",
+    id_b: str = "id_b",
+    max_rounds: int = 20,
+) -> DataFrame:
+    """Connected components over a near-dup pair list → ``(node, label)``
+    where ``label`` is the component's minimum id (the canonical doc of a
+    duplicate cluster — the step after pair generation in every dedup
+    pipeline).
+
+    Algorithm: iterative min-label propagation **with pointer jumping** —
+    each round a node adopts the minimum of (its label, its neighbors'
+    labels, its label's label).  The label-of-label join halves the
+    distance to the component minimum every round, so convergence is
+    O(log(diameter)) rounds, not O(diameter) (same round complexity class
+    as large-star/small-star, Kiveris et al., expressed as two equi-joins
+    + one groupBy per round — no driver-side graph state).
+
+    Scale profile: each round shuffles edges and labels hash-partitioned
+    on the node id; ``localCheckpoint`` truncates lineage so plans stay
+    flat across rounds.  Convergence check is a ``limit(1).count()`` probe
+    per round (labels only decrease; a fixpoint round changes nothing).
+    Terminates early; ``max_rounds`` bounds pathological inputs
+    (2^max_rounds-diameter components).
+    """
+    sym = pairs.select(
+        F.col(id_a).alias("_a"), F.col(id_b).alias("_b")
+    ).unionByName(pairs.select(F.col(id_b).alias("_a"), F.col(id_a).alias("_b")))
+    labels = (
+        sym.select(F.col("_a").alias("node"))
+        .distinct()
+        .withColumn("label", F.col("node"))
+        .localCheckpoint()
+    )
+    for _ in range(max_rounds):
+        nbr = sym.join(
+            labels.select(F.col("node").alias("_b"), "label"), "_b"
+        ).select(F.col("_a").alias("node"), "label")
+        jump = (
+            labels.alias("l1")
+            .join(
+                labels.select(
+                    F.col("node").alias("_ln"), F.col("label").alias("_ll")
+                ),
+                F.col("l1.label") == F.col("_ln"),
+            )
+            .select(F.col("l1.node").alias("node"), F.col("_ll").alias("label"))
+        )
+        new = (
+            labels.unionByName(nbr)
+            .unionByName(jump)
+            .groupBy("node")
+            .agg(F.min("label").alias("label"))
+            .localCheckpoint()
+        )
+        changed = (
+            new.join(labels.select("node", F.col("label").alias("_old")), "node")
+            .filter(F.col("label") < F.col("_old"))
+            .limit(1)
+            .count()
+        )
+        labels = new
+        if changed == 0:
+            break
+    else:
+        # labels were still changing when max_rounds ran out — returning
+        # them silently would yield wrong cluster ids downstream
+        raise RuntimeError(
+            f"connected_components did not converge within {max_rounds} "
+            "rounds (component diameter > 2^max_rounds); raise max_rounds"
+        )
+    return labels
+
+
+# --- cross-document duplicate spans (substring dedup) -------------------------
+
+
+def duplicate_spans(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    k: int = 5,
+    min_docs: int = 2,
+    hash_shuffle: bool = False,
+) -> DataFrame:
+    """Cross-document duplicate-SPAN detection: for every document, the
+    maximal token spans whose every ``k``-token window also occurs in at
+    least ``min_docs - 1`` other documents.
+
+    This is the distributed formulation of the duplicate-substring pass of
+    Lee et al. 2022 ("Deduplicating Training Data Makes Language Models
+    Better") — there built on a single-machine suffix array, which does not
+    distribute.  The k-gram inverted-index form does, in three
+    key-partitioned exchanges (no global state, no driver collection):
+
+    1. explode each doc into ``(pos, k-gram)`` windows        [narrow]
+    2. bucket-collect occurrences per gram, keep grams in
+       >= ``min_docs`` docs, re-explode survivors             [shuffle: gram]
+    3. merge overlapping/adjacent duplicated windows per doc
+       (gaps-and-islands; windows at starts p, q chain into one
+       covered region iff ``q - p <= k``)                     [shuffle: id]
+
+    One pass over the grams — collecting occurrences and filtering in the
+    same aggregation avoids a second gram-keyed exchange AND re-deriving
+    the tokenize+explode lineage for the join-back side (measured ~2× at
+    sf0.1).  Per-gram occurrence lists are bounded by the duplication
+    itself (a gram's list is exactly its corpus occurrences).
+
+    Returns ``(id_col, span_start, span_len)``, 1-based token indices,
+    BIGINT.  Unlike MinHash/SimHash (document-level near-dup), this finds
+    partial overlap — boilerplate, quotes, templated passages — inside
+    otherwise-distinct documents.
+
+    Grams are grouped by their token STRING by default: a 31-bit hash
+    has birthday collisions at corpus scale and a 128-bit hash can't be
+    mirrored portably in the DuckDB oracle.  ``hash_shuffle=True``
+    selects the 100 TB exchange layout — xxhash64 keys in the big
+    shuffle + an exact string-confirm pass over the duplicated
+    candidates (identical results, pinned in tests; see
+    ``_spans_from_toks`` for the measured trade-off).
+    """
+    from ..functions import text as tx
+
+    toks = df.select(
+        F.col(id_col).alias("_id"), tx.tokens(F.col(text_col)).alias("_t")
+    )
+    if hash_shuffle:
+        # the two-phase detector joins candidates back to the token
+        # table (the confirm pass), so a lazy relation would pay the
+        # char-level tokenize twice
+        toks = toks.localCheckpoint()
+    return _spans_from_toks(toks, k, min_docs, hash_shuffle).select(
+        F.col("_id").alias(id_col), "span_start", "span_len"
+    )
+
+
+def _spans_from_toks(
+    toks: DataFrame, k: int, min_docs: int, hash_shuffle: bool = False
+) -> DataFrame:
+    """duplicate_spans over a pre-tokenized (_id, _t) relation — shared
+    with remove_duplicate_spans so the corpus tokenizes once there.
+
+    ``hash_shuffle`` selects the exchange layout, SAME exact results
+    either way (equality pinned in tests/test_fuzzy_decontam.py):
+
+    - ``False`` (default): one groupBy on the gram STRING.  Optimal at
+      bench scale — r12 A/B at sf0.1: 3.5 s vs 4.7 s for the span
+      stage of cur_pipeline_v2, because two extra exchanges + a join
+      cost more than the ~60% shuffle-byte cut saves on 32 local
+      cores.
+    - ``True``: two-phase — phase 1 shuffles ``(_id, _pos,
+      xxhash64(gram))`` so the gram string never leaves the map side
+      (fixed 8-byte keys; the aggregation alone measured 2.5x faster
+      at sf0.1), then phase 2 re-derives true gram strings for the
+      hash-duplicated CANDIDATES only (id-keyed join back to the
+      token table) and re-applies ``min_docs`` by STRING, dropping
+      any 64-bit collision merge — byte-identical results.  This is
+      the 100 TB layout: when the gram exchange is TBs of strings
+      across a real cluster, byte volume dominates fixed stage
+      latency and the candidate fraction (duplicated occurrences
+      only, ~7% on the bench corpus) bounds phase 2.
+
+    ``toks`` must be MATERIALIZED when ``hash_shuffle=True`` (the
+    confirm pass joins back to it)."""
+    starts = F.when(
+        F.size("_t") >= k, F.sequence(F.lit(1), F.size("_t") - (k - 1))
+    ).otherwise(F.array().cast("array<int>"))
+
+    def occ_filter(col: Column) -> Column:
+        return (
+            F.size(F.array_distinct(F.transform(col, lambda o: o["_id"])))
+            >= min_docs
+        )
+
+    if hash_shuffle:
+        gram_h = toks.select(
+            "_id",
+            F.explode(
+                F.transform(
+                    starts,
+                    lambda i: F.struct(
+                        i.alias("_pos"),
+                        F.xxhash64(
+                            F.concat_ws(" ", F.slice("_t", i, k))
+                        ).alias("_h"),
+                    ),
+                )
+            ).alias("_w"),
+        ).select(
+            "_id", F.col("_w._pos").alias("_pos"), F.col("_w._h").alias("_h")
+        )
+        cand = (
+            gram_h.groupBy("_h")
+            .agg(F.collect_list(F.struct("_id", "_pos")).alias("_occ"))
+            .filter(occ_filter(F.col("_occ")))
+            .select(F.explode("_occ").alias("_o"))
+            .select(
+                F.col("_o._id").alias("_id"), F.col("_o._pos").alias("_pos")
+            )
+        )
+        grams = cand.join(toks, "_id").select(
+            "_id",
+            "_pos",
+            F.concat_ws(" ", F.slice("_t", F.col("_pos"), k)).alias("_g"),
+        )
+    else:
+        # r13 note: measured, deliberately KEPT as the expression form —
+        # the interleaved A/B (tools/ab_arrowhash.py, 32-way layout)
+        # showed the JVM transform(concat_ws(slice)) expansion at 0.25 s
+        # vs 0.43 s for the Arrow-kernel twin: the gram strings would
+        # cross the Python boundary twice (token arrays in, grams out)
+        # and the per-window work is native concat, not an interpreted
+        # char fold.
+        grams = toks.select(
+            "_id",
+            F.explode(
+                F.transform(
+                    starts,
+                    lambda i: F.struct(
+                        i.alias("_pos"),
+                        F.concat_ws(" ", F.slice("_t", i, k)).alias("_g"),
+                    ),
+                )
+            ).alias("_w"),
+        ).select(
+            "_id", F.col("_w._pos").alias("_pos"), F.col("_w._g").alias("_g")
+        )
+    hits = (
+        grams.groupBy("_g")
+        .agg(F.collect_list(F.struct("_id", "_pos")).alias("_occ"))
+        .filter(occ_filter(F.col("_occ")))
+        .select(F.explode("_occ").alias("_o"))
+        .select(F.col("_o._id").alias("_id"), F.col("_o._pos").alias("_pos"))
+    )
+    w = Window.partitionBy("_id").orderBy("_pos")
+    brk = F.when(F.col("_pos") - F.lag("_pos").over(w) > k, 1).otherwise(0)
+    islands = hits.withColumn("_brk", brk).withColumn(
+        "_isl", F.sum("_brk").over(w)
+    )
+    return (
+        islands.groupBy("_id", "_isl")
+        .agg(
+            F.min("_pos").cast("long").alias("span_start"),
+            (F.max("_pos") - F.min("_pos") + k).cast("long").alias("span_len"),
+        )
+        .select("_id", "span_start", "span_len")
+    )
+
+
+def keep_best_per_cluster(
+    df: DataFrame,
+    pairs: DataFrame,
+    id_col: str,
+    score_col: str,
+) -> DataFrame:
+    """Survivor selection after near-dup clustering: per connected
+    component keep the BEST-scoring member (``score_col`` desc, id asc
+    tie-break) instead of the id-minimal one — real pipelines keep the
+    highest-quality copy, not an arbitrary canonical.
+
+    Documents outside every pair are their own singleton cluster and
+    survive untouched.  Shuffle profile: the pointer-jumping rounds of
+    ``connected_components`` (O(log diameter) keyed exchanges over the
+    PAIR set only — near-dup clusters, a vanishing fraction of the
+    corpus), one id-keyed LEFT join to attach labels (pair side
+    broadcast-able at scale), one window over ``_cl``.  Returns the
+    surviving rows of ``df`` with their ``cluster_id``.
+    """
+    cc = connected_components(pairs).select(
+        F.col("node").alias(id_col), F.col("label").alias("_cl0")
+    )
+    labeled = df.join(F.broadcast(cc), id_col, "left").withColumn(
+        "_cl", F.coalesce(F.col("_cl0"), F.col(id_col))
+    )
+    w = Window.partitionBy("_cl").orderBy(
+        F.col(score_col).desc(), F.col(id_col)
+    )
+    return (
+        labeled.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn", "_cl0")
+        .withColumnRenamed("_cl", "cluster_id")
+    )
+
+
+def remove_duplicate_spans(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    k: int = 5,
+    min_docs: int = 2,
+    hash_shuffle: bool = False,
+    keep_cols: tuple[str, ...] = (),
+    spent: list | None = None,
+) -> DataFrame:
+    """The removal half of Lee et al. substring dedup: excise every
+    detected cross-document duplicate span (:func:`duplicate_spans`) and
+    reassemble the surviving tokens.
+
+    ``spent`` (r13 opt, guide §5): optional out-list that receives this
+    operator's internal checkpointed token table.  A caller that
+    materializes everything derived from this output (curate_v2
+    checkpoints the rewritten corpus immediately) may then pass each
+    element to ``session.release_checkpoint`` — the token arrays are
+    the largest per-call block and would otherwise linger until a
+    driver GC.  Callers that return a lazy plan over this output (the
+    dd_span_removal query) must NOT release it.
+
+    Policy: spans are cut in EVERY document that carries them (the
+    conservative every-occurrence rule — boilerplate and templated
+    passages should vanish, not survive in one arbitrary winner; a
+    keep-one-copy variant is an orderBy/row_number tweak on the span
+    side).  Output text is the space-joined surviving token sequence —
+    whitespace is normalized as a side effect, same as every downstream
+    tokenizer sees it.
+
+    Shuffle profile on top of duplicate_spans' two keyed exchanges: one
+    id-keyed span collect + one id-keyed LEFT join back to the token
+    arrays (no explode of surviving docs — the position filter runs
+    inside an array lambda).  The corpus is TOKENIZED ONCE (the token
+    table is checkpointed and feeds both the gram explode and the
+    reassembly — the char-level regex pass is the dominant per-row
+    cost).  Returns ``(id_col, clean_text, n_removed)`` for every input
+    document, untouched docs included (n_removed = 0).
+
+    ``keep_cols`` (r13, VERDICT r12 task 5): passthrough columns to
+    carry through the internal token checkpoint and return alongside
+    ``clean_text`` — so a caller that needs the rest of the row (the
+    curation chains' rewrite step) reads it from THIS operator's
+    output instead of re-deriving its input lineage and joining back
+    by id.  Profiled at sf0.1: the join-back layout re-paid the
+    classifier scan + an id-keyed exchange — 1.68 s of cur_v2's 3.45 s
+    stage 3; carrying (lang, source, n_chars) through the checkpoint
+    is bytes, not compute.  Same row set either way (every input doc
+    is returned), so the rewrite is equivalence-testable.
+    """
+    from ..functions import text as tx
+
+    toks = df.select(
+        F.col(id_col).alias("_id"),
+        *[F.col(c) for c in keep_cols],
+        tx.tokens(F.col(text_col)).alias("_t"),
+    ).localCheckpoint()
+    if spent is not None:
+        spent.append(toks)
+    spans = (
+        _spans_from_toks(toks, k, min_docs, hash_shuffle)
+        .groupBy("_id")
+        .agg(F.collect_list(F.struct("span_start", "span_len")).alias("_spans"))
+    )
+    joined = toks.join(spans, "_id", "left").withColumn(
+        "_spans", F.coalesce(F.col("_spans"), F.array())
+    )
+    covered = lambda i: F.exists(  # noqa: E731 — position i is 1-based
+        F.col("_spans"),
+        lambda s: (i >= s["span_start"]) & (i < s["span_start"] + s["span_len"]),
+    )
+    clean = F.filter(F.col("_t"), lambda t, i: ~covered(i + 1))
+    return joined.select(
+        F.col("_id").alias(id_col),
+        *[F.col(c) for c in keep_cols],
+        F.array_join(clean, " ").alias("clean_text"),
+        (F.size("_t") - F.size(clean)).cast("long").alias("n_removed"),
+    )
+
+
+def semantic_dedup(
+    clustered: DataFrame,
+    threshold: float,
+    id_col: str = "vec_id",
+    vec_col: str = "v",
+    cluster_col: str = "cluster",
+    materialize: bool = True,
+) -> DataFrame:
+    """SemDeDup-style semantic deduplication (Abbas et al. 2023): within
+    each cluster, a vector is *removed* when some earlier-id vector in the
+    same cluster has cosine similarity >= ``threshold`` — survivors are
+    the id-minimal representatives, removal is one-hop domination (the
+    transitive-closure variant is ``connected_components`` over these
+    pairs).
+
+    Input must carry a cluster assignment (e.g. nearest-centroid argmin —
+    ``queries/analysis.py::dd_semantic`` derives one from per-label
+    centroids).  The pair join is an **equi-join on the cluster id**: at
+    100 TB candidates are bounded per cluster — pairs never cross
+    clusters, so cost is Σ|cluster|², the quantity k-means sizing
+    controls, not N².  One shuffle each side on the cluster key.
+
+    Returns the removed rows: ``(id, cluster, dup_of, cos)`` with
+    ``dup_of`` the smallest dominating id and ``cos`` its similarity.
+
+    ``materialize`` (default on) localCheckpoints the pruned input before
+    the a/b self-join: Spark never reuses a self-join's exchanges, so a
+    lazy ``clustered`` — typically an expensive nearest-centroid
+    assignment — would otherwise be derived once per side (the no-self-
+    join discipline of the pair generators above; at 100 TB this is a
+    persisted assignment table instead).
+    """
+    from .similarity import dot, norm
+
+    # per-vector norms computed ONCE before the pair fan-out: cosine on
+    # a pair is then a single interpreted-HOF dot instead of three
+    # (dot + both norms) — same dot/(na·nb) arithmetic, so values are
+    # bit-identical to the naive form (measured ~3× on the pair stage).
+    # r13 note (guide §4.2, measured): the Arrow pair_dot/vec_norm
+    # kernels were A/B'd here and REVERTED — both 64-dim arrays cross
+    # the Python boundary per candidate pair, and the crossing cost
+    # exceeded the interpreted fold cost (dd_semantic 2.0 s → 4.6 s).
+    pruned = clustered.select(
+        F.col(cluster_col).alias("_ck"),
+        F.col(id_col).alias("_id"),
+        F.col(vec_col).alias("_v"),
+        norm(F.col(vec_col)).alias("_n"),
+    )
+    if materialize:
+        pruned = pruned.localCheckpoint()
+    a = pruned.select(
+        F.col("_ck"),
+        F.col("_id").alias("_ida"),
+        F.col("_v").alias("_va"),
+        F.col("_n").alias("_na"),
+    )
+    b = pruned.select(
+        F.col("_ck"),
+        F.col("_id").alias("_idb"),
+        F.col("_v").alias("_vb"),
+        F.col("_n").alias("_nb"),
+    )
+    hits = (
+        a.join(b, "_ck")
+        .filter(F.col("_ida") < F.col("_idb"))
+        .withColumn(
+            "_s",
+            dot(F.col("_va"), F.col("_vb")) / (F.col("_na") * F.col("_nb")),
+        )
+        .filter(F.col("_s") >= threshold)
+    )
+    best = hits.groupBy("_ck", "_idb").agg(
+        F.min(F.struct("_ida", "_s")).alias("_m")
+    )
+    return best.select(
+        F.col("_idb").alias(id_col),
+        F.col("_ck").alias(cluster_col),
+        F.col("_m._ida").alias("dup_of"),
+        F.col("_m._s").alias("cos"),
+    )

@@ -37,6 +37,28 @@ def shuffle_hash(key, seed: int):
     return (h1 * SHUFFLE_A + SHUFFLE_C) % SHUFFLE_M
 
 
+def checked_long_id(id_col: str, context: str):
+    """``id_col`` as a long, raising PER-ROW on NULL or non-castable
+    values — the guard every seeded-hash consumer needs: a NULL key
+    would make ``shuffle_hash`` NULL and those rows silently sort
+    first (ascending) or last (descending) instead of erroring.
+    Shared by ``selection.gumbel_topk`` and
+    ``sampling.select_to_token_budget``."""
+    idl = F.col(id_col).try_cast("long")
+    return F.when(
+        F.col(id_col).isNull() | idl.isNull(),
+        F.raise_error(
+            F.concat(
+                F.lit(
+                    f"{context}: {id_col} must be numeric "
+                    "(long-castable) and non-NULL; got "
+                ),
+                F.coalesce(F.col(id_col).cast("string"), F.lit("NULL")),
+            )
+        ).cast("long"),
+    ).otherwise(idl)
+
+
 def shuffle_hash_sql(key_expr: str, seed: int) -> str:
     """The same permutation key as ANSI/DuckDB SQL text (oracle side)."""
     h1 = f"(({key_expr}) % {SHUFFLE_M} + {seed}) % {SHUFFLE_M}"
@@ -110,8 +132,8 @@ def _global_row_number(df: DataFrame, order_exprs: list, bucket):
     single-partition ``Window.orderBy`` funnel.
 
     Phase 1: count rows per order-aligned bucket — one parallel aggregate
-    whose result is <= #buckets rows, collected (a metadata-scale
-    result, whitelisted in tests/test_plans.py).
+    whose result is <= #buckets rows, collected driver-side (the same
+    metadata-scale carve-out as the sampling/centroid two-phase ops).
     Phase 2: ``row_number`` within each bucket (a *partitioned* window —
     ``Exchange hashpartitioning(_bucket)``, never ``SinglePartition``)
     plus the bucket's literal offset.
@@ -191,3 +213,44 @@ def drop_last_batches(df: DataFrame, batch_size: int, order_cols: list[str]) -> 
         .drop("_rn", "_rn0")
     )
 
+
+def leakage_safe_split(
+    docs: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    val_pct: int = 20,
+    seed: int = 23,
+    num_perm: int = 16,
+    bands: int = 4,
+    shingle_n: int = 3,
+) -> DataFrame:
+    """Group-aware train/val split with a NEAR-DUP LEAKAGE GUARD: a
+    plain per-document split puts near-duplicates of training docs into
+    the eval set (Lee et al. 2022 measure the resulting eval
+    contamination), so the split key here is the document's near-dup
+    CLUSTER, not the document — MinHash-LSH pairs → connected
+    components → every doc keyed by its cluster's canonical (minimum)
+    id, singletons by their own id — and the side is
+    ``shuffle_hash(root, seed) % 100 < val_pct``.  Whole clusters land
+    on one side by construction (invariant-tested).
+
+    Returns ``(id, cluster_id, split)``.  Scale shape: pair generation
+    is the banded LSH equi-join, components are O(log d) pointer-jump
+    rounds, the root join hash-partitions on the id, and the split
+    itself is a narrow map — nothing new shuffles beyond the dedup
+    machinery this engine already runs."""
+    from .dedup import connected_components, minhash_lsh_pairs
+
+    pairs = minhash_lsh_pairs(
+        docs, id_col, text_col, num_perm, bands, shingle_n
+    )
+    cc = connected_components(pairs).withColumnRenamed("node", id_col)
+    rooted = docs.select(id_col).join(cc, id_col, "left").select(
+        F.col(id_col),
+        F.coalesce("label", F.col(id_col)).alias("cluster_id"),
+    )
+    side = F.when(
+        shuffle_hash(F.col("cluster_id"), seed) % 100 < F.lit(val_pct),
+        F.lit("val"),
+    ).otherwise(F.lit("train"))
+    return rooted.select(id_col, "cluster_id", side.alias("split"))

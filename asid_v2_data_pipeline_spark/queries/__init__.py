@@ -15,9 +15,39 @@ name before hashing).  Portability rules used throughout:
 
 from __future__ import annotations
 
-from . import dedup_sim, encoders, grid, relational
+from . import (
+    _shared,
+    analysis,
+    audio,
+    containers,
+    curation,
+    dedup_sim,
+    encoders,
+    formats,
+    graph,
+    grid,
+    media,
+    relational,
+    temporal,
+    webshards,
+)
 
-_MODULES = (relational, grid, encoders, dedup_sim)
+_MODULES = (
+    relational,
+    grid,
+    encoders,
+    _shared,
+    dedup_sim,
+    curation,
+    media,
+    graph,
+    audio,
+    analysis,
+    containers,
+    webshards,
+    formats,
+    temporal,
+)
 
 
 def all_queries() -> dict:

@@ -1,26 +1,40 @@
-"""Exact dedup query with its DuckDB oracle: survivors of a first-two-token
-key, counted per language."""
+"""Deduplication + similarity-search queries with DuckDB oracles:
+exact/minhash-LSH/simhash/cluster dedup, contrastive pairs, top-k
+cosine, LSH tables, IVF-ADC/PQ (+ served twins), DSIR selection,
+chunking/packing, BM25-adjacent text prep.  Split out of the former
+queries/scale.py (VERDICT r10 task 3)."""
 
 from __future__ import annotations
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from ..functions.text import tokens
-from ..operators.dedup import exact_dedup
+from ..functions import text as tx
+from ..operators import dedup as dd
+from ..operators import similarity as sim
 from ..schemas import load_table
-
-# DuckDB twin of functions.text.tokens (same lower + split regex)
-TOKENS_SQL = (
-    "list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'), x -> x <> '')"
+from ._shared import (
+    TOKENS_SQL,
+    _cached_index,
+    _char_hash_sql,
+    _index_cache_path,
+    _parallel,
+    _quality_expr_sql,
 )
+
+
+
+# --- dedup --------------------------------------------------------------------
 
 
 def dd_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup on a derived key (first 2 tokens): survivors per lang."""
+    # r13: measured, left WITHOUT the _parallel layout — the narrow work
+    # (first-2-token slice) is trivial, so the extra exchange lost
+    # (0.43 s -> 0.68 s in the in-situ A/B)
     d = load_table(spark, sf_dir, "documents")
-    keyed = d.withColumn("dkey", F.concat_ws(" ", F.slice(tokens(F.col("text")), 1, 2)))
-    surv = exact_dedup(keyed, ["dkey"], "doc_id")
+    keyed = d.withColumn(
+        "dkey", F.concat_ws(" ", F.slice(tx.tokens(F.col("text")), 1, 2))
+    )
+    surv = dd.exact_dedup(keyed, ["dkey"], "doc_id")
     return (
         surv.groupBy("lang")
         .agg(F.count(F.lit(1)).alias("n_docs"), F.sum("doc_id").alias("sum_ids"))
@@ -44,6 +58,1172 @@ GROUP BY lang ORDER BY lang
 """
 
 
+def dd_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact n-gram Jaccard near-dup pairs (threshold 0.5), with the
+    hot-shingle DF cutoff ON: stop-shingles (df > 50) are excluded from
+    candidate generation except among hot-heavy docs — provably
+    result-preserving (see jaccard_pairs docstring), so the oracle is the
+    plain all-shingles SQL."""
+    d = _parallel(load_table(spark, sf_dir, "documents"), cols=("doc_id", "text"))
+    pairs = dd.jaccard_pairs(d, "doc_id", "text", n=3, threshold=0.5, df_cutoff=50)
+    return pairs.select(
+        "id_a", "id_b", F.round("jaccard", 6).alias("jaccard")
+    ).orderBy("id_a", "id_b")
+
+
+DD_JACCARD_SQL = f"""
+WITH sh AS (
+  SELECT doc_id, unnest(
+    (SELECT CASE WHEN len(t) >= 3 THEN
+       list_distinct(list_transform(range(0, len(t) - 2),
+                     i -> t[i + 1] || ' ' || t[i + 2] || ' ' || t[i + 3]))
+     ELSE [array_to_string(t, ' ')] END
+     FROM (SELECT {TOKENS_SQL} AS t))
+  ) AS s
+  FROM documents
+), sizes AS (
+  SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY doc_id
+), inter AS (
+  SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS i
+  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
+  GROUP BY 1, 2
+)
+SELECT id_a, id_b,
+       ROUND(i * 1.0 / (sa.sz + sb.sz - i), 6) AS jaccard
+FROM inter
+JOIN sizes sa ON sa.doc_id = id_a
+JOIN sizes sb ON sb.doc_id = id_b
+WHERE i * 1.0 / (sa.sz + sb.sz - i) >= 0.5
+ORDER BY id_a, id_b
+"""
+
+
+def dd_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MinHash+LSH candidate pairs (16 perms, 4 bands)."""
+    d = _parallel(load_table(spark, sf_dir, "documents"), cols=("doc_id", "text"))
+    return dd.minhash_lsh_pairs(d, "doc_id", "text", num_perm=16, bands=4).orderBy(
+        "id_a", "id_b"
+    )
+
+
+_TOKEN_HASHES_SQL = (
+    f"list_transform({TOKENS_SQL}, s -> "
+    "list_reduce(list_prepend(CAST(0 AS BIGINT), "
+    "list_transform(range(1, len(s) + 1), i -> ascii(substr(s, i, 1)))), "
+    "(a, b) -> (a * 31 + b) % 2147483648))"
+)
+
+# shingle hashes combined from token hashes (n=3, COMBINE=1000003) —
+# mirrors operators.dedup._shingle_hashes_from_token_hashes
+_SHINGLE_HASHES_SQL = """
+, th AS (SELECT doc_id, {TH} AS th FROM documents
+), shing AS (
+  SELECT doc_id,
+         CASE WHEN len(th) >= 3 THEN
+           list_distinct(list_transform(range(0, len(th) - 2), i ->
+             ((((CAST(0 AS BIGINT) * 1000003 + th[i + 1]) % 2147483648)
+                * 1000003 + th[i + 2]) % 2147483648
+                * 1000003 + th[i + 3]) % 2147483648))
+         ELSE [list_reduce(list_prepend(CAST(0 AS BIGINT), th),
+                           (a, b) -> (a * 1000003 + b) % 2147483648)]
+         END AS hs
+  FROM th
+)
+""".replace("{TH}", _TOKEN_HASHES_SQL)
+
+
+def _minhash_pairs_ctes(num_perm: int = 16, bands: int = 4) -> str:
+    """CTE chain ending in ``pairs(id_a, id_b)`` — shared by the minhash
+    and cluster oracles."""
+    consts = dd._perm_constants(num_perm)
+    rows = num_perm // bands
+    mins = ", ".join(
+        f"list_min(list_transform(hs, x -> (x * {a} + {b}) % 2147483647)) AS m{i}"
+        for i, (a, b) in enumerate(consts)
+    )
+    band_exprs = []
+    for bband in range(bands):
+        # band hash: fold from 0 over the band's signature slice
+        expr = "CAST(0 AS BIGINT)"
+        for r in range(rows):
+            expr = f"(({expr}) * 31 + m{bband * rows + r}) % 2147483648"
+        band_exprs.append(f"({bband}, {expr})")
+    return f"""dummy AS (SELECT 1)
+{_SHINGLE_HASHES_SQL}
+, sigs AS (
+  SELECT doc_id, {mins} FROM shing
+), bandsx AS (
+  SELECT doc_id, b.band, b.bucket
+  FROM sigs, LATERAL (VALUES {', '.join(band_exprs)}) AS b(band, bucket)
+), pairs AS (
+  SELECT a.doc_id AS id_a, b.doc_id AS id_b
+  FROM bandsx a JOIN bandsx b
+    ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id
+  GROUP BY 1, 2
+)"""
+
+
+def _minhash_sql(num_perm: int = 16, bands: int = 4) -> str:
+    return (
+        "WITH "
+        + _minhash_pairs_ctes(num_perm, bands)
+        + "\nSELECT id_a, id_b FROM pairs ORDER BY id_a, id_b\n"
+    )
+
+
+def _cluster_sql(num_perm: int = 16, bands: int = 4) -> str:
+    """Recursive-CTE oracle for connected components over the minhash
+    pairs: transitive closure on the symmetric edge list, then min
+    reachable id per node."""
+    return (
+        "WITH RECURSIVE "
+        + _minhash_pairs_ctes(num_perm, bands)
+        + """
+, sym AS (
+  SELECT id_a AS a, id_b AS b FROM pairs
+  UNION ALL
+  SELECT id_b, id_a FROM pairs
+), reach(node, r) AS (
+  SELECT DISTINCT a, a FROM sym
+  UNION
+  SELECT s.a, reach.r FROM sym s JOIN reach ON s.b = reach.node
+)
+SELECT node AS doc_id, CAST(MIN(r) AS BIGINT) AS cluster_id
+FROM reach GROUP BY node ORDER BY doc_id
+"""
+    )
+
+
+def dd_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Near-dup clustering — the step after pair generation: MinHash-LSH
+    candidate pairs → connected components → each doc labeled with its
+    cluster's canonical (minimum) doc_id."""
+    d = load_table(spark, sf_dir, "documents")
+    pairs = dd.minhash_lsh_pairs(d, "doc_id", "text", num_perm=16, bands=4)
+    cc = dd.connected_components(pairs)
+    return cc.select(
+        F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
+    ).orderBy("doc_id")
+
+
+def ds_contrastive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Training-data generation for embedding models: near-dup pairs
+    become (anchor, positive) with a deterministic IN-BATCH negative —
+    the next pair's positive in hash order, cyclically — the standard
+    in-batch-negatives shape, derived entirely from the corpus with no
+    labels.  One window over the (tiny) pair set; the corpus itself
+    never re-shuffles."""
+    from pyspark.sql.window import Window
+
+    from ..operators.split import shuffle_hash
+
+    d = load_table(spark, sf_dir, "documents")
+    pairs = dd.minhash_lsh_pairs(
+        d, "doc_id", "text", num_perm=16, bands=4
+    ).localCheckpoint()  # feeds the triple window AND the near-dup veto
+    ordered = pairs.withColumn(
+        "_o", shuffle_hash(F.col("id_a") * 31 + F.col("id_b"), 43)
+    )
+    w = Window.orderBy("_o", "id_a", "id_b")
+    out = ordered.select(
+        F.col("id_a").alias("anchor"),
+        F.col("id_b").alias("positive"),
+        F.coalesce(
+            F.lead("id_b").over(w), F.first("id_b").over(w.rowsBetween(
+                Window.unboundedPreceding, Window.unboundedFollowing
+            ))
+        ).alias("negative"),
+    )
+    # a usable triple needs a REAL negative: not the anchor/positive
+    # themselves, and not a known near-dup of the anchor (veto via
+    # anti-join on the sorted pair key) — degenerate triples (tiny or
+    # wrap-around clusters) are dropped, not emitted poisoned
+    out = out.filter(
+        (F.col("negative") != F.col("anchor"))
+        & (F.col("negative") != F.col("positive"))
+    )
+    veto = pairs.select(
+        F.col("id_a").alias("_va"), F.col("id_b").alias("_vb")
+    )
+    out = out.join(
+        F.broadcast(veto),
+        (
+            (F.least("anchor", "negative") == F.col("_va"))
+            & (F.greatest("anchor", "negative") == F.col("_vb"))
+        ),
+        "left_anti",
+    )
+    return out.orderBy("anchor", "positive")
+
+
+def _contrastive_sql() -> str:
+    from ..operators.split import shuffle_hash_sql
+
+    oh = shuffle_hash_sql("(id_a * 31 + id_b)", 43)
+    return (
+        "WITH "
+        + _minhash_pairs_ctes(16, 4)
+        + f""",
+ordered AS (SELECT id_a, id_b, {oh} AS o FROM pairs),
+trip AS (
+  SELECT id_a AS anchor, id_b AS positive,
+         COALESCE(
+           lead(id_b) OVER (ORDER BY o, id_a, id_b),
+           first_value(id_b) OVER (ORDER BY o, id_a, id_b
+             ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
+         ) AS negative
+  FROM ordered
+)
+SELECT anchor, positive, negative FROM trip t
+WHERE negative <> anchor AND negative <> positive
+  AND NOT EXISTS (
+    SELECT 1 FROM pairs p
+    WHERE p.id_a = LEAST(t.anchor, t.negative)
+      AND p.id_b = GREATEST(t.anchor, t.negative))
+ORDER BY anchor, positive
+"""
+    )
+
+
+def dd_cluster_best(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Survivor selection: per near-dup cluster keep the HIGHEST-quality
+    member (not the id-minimal one) — quality desc, id asc tie-break;
+    singletons survive as their own cluster."""
+    d = load_table(spark, sf_dir, "documents")
+    pairs = dd.minhash_lsh_pairs(d, "doc_id", "text", num_perm=16, bands=4)
+    best = dd.keep_best_per_cluster(
+        d.withColumn("q", tx.quality_score(F.col("text"))),
+        pairs,
+        "doc_id",
+        "q",
+    )
+    return best.select(
+        "doc_id",
+        F.col("cluster_id").cast("long").alias("cluster_id"),
+        F.round("q", 6).alias("q"),
+    ).orderBy("doc_id")
+
+
+def _cluster_best_sql(num_perm: int = 16, bands: int = 4) -> str:
+    return (
+        "WITH RECURSIVE "
+        + _minhash_pairs_ctes(num_perm, bands)
+        + f"""
+, sym AS (
+  SELECT id_a AS a, id_b AS b FROM pairs
+  UNION ALL
+  SELECT id_b, id_a FROM pairs
+), reach(node, r) AS (
+  SELECT DISTINCT a, a FROM sym
+  UNION
+  SELECT s.a, reach.r FROM sym s JOIN reach ON s.b = reach.node
+), lbl AS (
+  SELECT node, MIN(r) AS cl FROM reach GROUP BY node
+), scored AS (
+  SELECT d.doc_id,
+         COALESCE(l.cl, d.doc_id) AS cluster_id,
+         {_quality_expr_sql()} AS q
+  FROM documents d LEFT JOIN lbl l ON l.node = d.doc_id
+), ranked AS (
+  SELECT doc_id, cluster_id, q,
+         row_number() OVER (PARTITION BY cluster_id ORDER BY q DESC, doc_id) AS rn
+  FROM scored
+)
+SELECT doc_id, CAST(cluster_id AS BIGINT) AS cluster_id, ROUND(q, 6) AS q
+FROM ranked WHERE rn = 1 ORDER BY doc_id
+"""
+    )
+
+
+def dd_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Incremental dedup against a signature index: documents with
+    doc_id % 5 = 0 play the incoming micro-batch, the rest the persisted
+    corpus index; returns the batch docs' candidate matches in history
+    (batch side broadcast — the index never shuffles)."""
+    d = load_table(spark, sf_dir, "documents")
+    batch = dd.minhash_band_rows(
+        d.filter(F.col("doc_id") % 5 == 0), "doc_id", "text", 16, 4
+    )
+    index = dd.minhash_band_rows(
+        d.filter(F.col("doc_id") % 5 != 0), "doc_id", "text", 16, 4
+    )
+    return dd.index_candidates(batch, index).orderBy("id_new", "id_index")
+
+
+def _incremental_sql(num_perm: int = 16, bands: int = 4) -> str:
+    """Same band/bucket arithmetic; pairs restricted to (batch, index)."""
+    consts = dd._perm_constants(num_perm)
+    rows = num_perm // bands
+    mins = ", ".join(
+        f"list_min(list_transform(hs, x -> (x * {a} + {b}) % 2147483647)) AS m{i}"
+        for i, (a, b) in enumerate(consts)
+    )
+    band_exprs = []
+    for bband in range(bands):
+        expr = "CAST(0 AS BIGINT)"
+        for r in range(rows):
+            expr = f"(({expr}) * 31 + m{bband * rows + r}) % 2147483648"
+        band_exprs.append(f"({bband}, {expr})")
+    return f"""
+WITH dummy AS (SELECT 1)
+{_SHINGLE_HASHES_SQL}
+, sigs AS (
+  SELECT doc_id, {mins} FROM shing
+), bandsx AS (
+  SELECT doc_id, b.band, b.bucket
+  FROM sigs, LATERAL (VALUES {', '.join(band_exprs)}) AS b(band, bucket)
+)
+SELECT DISTINCT n.doc_id AS id_new, i.doc_id AS id_index
+FROM bandsx n JOIN bandsx i ON n.band = i.band AND n.bucket = i.bucket
+WHERE n.doc_id % 5 = 0 AND i.doc_id % 5 <> 0
+ORDER BY id_new, id_index
+"""
+
+
+def dd_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SimHash fingerprint per document (strongest check: raw values)."""
+    d = load_table(spark, sf_dir, "documents")
+    return dd.simhashes(d, "doc_id", "text", bits=32).orderBy("doc_id")
+
+
+def _simhash_sql(bits: int = 32) -> str:
+    bit_terms = " + ".join(
+        f"(CASE WHEN 2 * len(list_filter(hs, x -> (x // {1 << b}) % 2 = 1)) "
+        f"> len(hs) THEN CAST({1 << b} AS BIGINT) ELSE 0 END)"
+        for b in range(bits)
+    )
+    return f"""
+WITH dummy AS (SELECT 1)
+{_SHINGLE_HASHES_SQL}
+SELECT doc_id, {bit_terms} AS simhash
+FROM shing ORDER BY doc_id
+"""
+
+
+# --- similarity ---------------------------------------------------------------
+
+
+def dd_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SimHash near-dup pairs over the FULL documents table: Hamming
+    distance ≤ 3 on 32-bit fingerprints via banded blocking (4 × 8-bit
+    chunks, equi-join on matching chunk, exact Hamming verify) — the
+    pigeonhole guarantee makes banding exact for hd ≤ 3, so results equal
+    the all-pairs oracle with no nested-loop join."""
+    d = load_table(spark, sf_dir, "documents")
+    sh = dd.simhashes(d, "doc_id", "text", bits=32)
+    return dd.simhash_pairs(
+        sh, "doc_id", "simhash", bits=32, bands=4, max_hd=3
+    ).orderBy("id_a", "id_b")
+
+
+def _simhash_pairs_sql(bits: int = 32) -> str:
+    bit_terms = " + ".join(
+        f"(CASE WHEN 2 * len(list_filter(hs, x -> (x // {1 << b}) % 2 = 1)) "
+        f"> len(hs) THEN CAST({1 << b} AS BIGINT) ELSE 0 END)"
+        for b in range(bits)
+    )
+    return f"""
+WITH dummy AS (SELECT 1)
+{_SHINGLE_HASHES_SQL}
+, fp AS (SELECT doc_id, {bit_terms} AS simhash FROM shing)
+SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+       CAST(bit_count(xor(a.simhash, b.simhash)) AS INT) AS hd
+FROM fp a JOIN fp b ON a.doc_id < b.doc_id
+WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
+ORDER BY id_a, id_b
+"""
+
+
+def sim_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact top-5 cosine neighbors for query vectors (vec_id < 10)."""
+    e = _parallel(load_table(spark, sf_dir, "embeddings"), "vec_id").withColumn(
+        "embedding", F.col("embedding").cast("array<double>")
+    )
+    q = e.filter(F.col("vec_id") < 10)
+    out = sim.topk_cosine(e, q, k=5)
+    return out.select(
+        "q_id", "c_id", F.round("score", 6).alias("score"), "rank"
+    ).orderBy("q_id", "rank")
+
+
+SIM_TOPK_SQL = """
+WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < 10),
+scored AS (
+  SELECT q_id, e.vec_id AS c_id,
+         list_dot_product(qv, v) /
+         (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(v, v))) AS s
+  FROM q JOIN e ON e.vec_id <> q.q_id
+), ranked AS (
+  SELECT q_id, c_id, s,
+         row_number() OVER (PARTITION BY q_id ORDER BY s DESC, c_id) AS rank
+  FROM scored
+)
+SELECT q_id, c_id, ROUND(s, 6) AS score, CAST(rank AS INT) AS rank
+FROM ranked WHERE rank <= 5
+ORDER BY q_id, rank
+"""
+
+
+def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """LSH-bucketed approximate top-5 (8 hyperplanes, deterministic)."""
+    e = load_table(spark, sf_dir, "embeddings").withColumn(
+        "embedding", F.col("embedding").cast("array<double>")
+    )
+    q = e.filter(F.col("vec_id") < 10)
+    out = sim.topk_cosine_lsh(e, q, dim=64, k=5, planes=8)
+    return out.select(
+        "q_id", "c_id", F.round("score", 6).alias("score"), "rank"
+    ).orderBy("q_id", "rank")
+
+
+def _ann_lsh_sql(dim: int = 64, planes: int = 8) -> str:
+    hps = sim._hyperplanes(dim, planes)
+    bucket = " + ".join(
+        f"(CASE WHEN list_dot_product(v, {hp!r}::DOUBLE[]) >= 0 "
+        f"THEN {1 << i} ELSE 0 END)"
+        for i, hp in enumerate(hps)
+    )
+    return f"""
+WITH e AS (
+  SELECT vec_id, embedding::DOUBLE[] AS v,
+         {bucket} AS bucket
+  FROM embeddings
+), q AS (SELECT vec_id AS q_id, v AS qv, bucket FROM e WHERE vec_id < 10),
+scored AS (
+  SELECT q_id, e.vec_id AS c_id,
+         list_dot_product(qv, v) /
+         (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(v, v))) AS s
+  FROM q JOIN e USING (bucket) WHERE e.vec_id <> q.q_id
+), ranked AS (
+  SELECT q_id, c_id, s,
+         row_number() OVER (PARTITION BY q_id ORDER BY s DESC, c_id) AS rank
+  FROM scored
+)
+SELECT q_id, c_id, ROUND(s, 6) AS score, CAST(rank AS INT) AS rank
+FROM ranked WHERE rank <= 5
+ORDER BY q_id, rank
+"""
+
+
+def ds_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """DSIR data selection (Xie et al. 2023) as a declared query: score
+    every document by the hashed-ngram log-likelihood ratio toward the
+    English-language target slice, top-20 by weight
+    (``operators/selection.py`` — distribution estimates are two
+    bucket-keyed aggregates; scoring is one narrow zero-shuffle pass
+    with the 256-entry ratio table inlined)."""
+    from ..operators.selection import dsir_weights
+
+    d = load_table(spark, sf_dir, "documents")
+    target = d.filter(F.col("lang") == "en")
+    w = dsir_weights(d, target, buckets=256)
+    return (
+        w.select("doc_id", "n_feats", F.round("weight", 4).alias("weight"))
+        .orderBy(F.col("weight").desc(), "doc_id")
+        .limit(20)
+    )
+
+
+def _dsir_ctes(buckets: int = 256, combine: int = 1000003) -> str:
+    """The shared WITH-body deriving ``scored(doc_id, n_feats, w)``:
+    identical hashes, identical add-one smoothing, identical per-bucket
+    ROUND(lr, 6) ratio table, and the per-doc fold runs over the same
+    feature list in the same order — the summed double is bit-identical,
+    not merely close."""
+    ch = _char_hash_sql("s")
+    return f"""
+WITH toks AS (
+  SELECT doc_id, lang, {TOKENS_SQL} AS t FROM documents
+), th AS (
+  SELECT doc_id, lang, list_transform(t, s -> {ch}) AS h FROM toks
+), fb AS (
+  SELECT doc_id, lang,
+         list_concat(
+           list_transform(h, x -> x % {buckets}),
+           CASE WHEN len(h) >= 2 THEN
+             list_transform(range(1, len(h)),
+                            i -> ((h[i] * {combine} + h[i+1]) % 2147483648) % {buckets})
+           ELSE [] END
+         ) AS fb
+  FROM th
+), raw_cnt AS (
+  SELECT b, COUNT(*) AS c FROM (SELECT unnest(fb) AS b FROM fb) GROUP BY b
+), tgt_cnt AS (
+  SELECT b, COUNT(*) AS c
+  FROM (SELECT unnest(fb) AS b FROM fb WHERE lang = 'en') GROUP BY b
+), nt AS (SELECT SUM(c) AS n FROM tgt_cnt),
+nr AS (SELECT SUM(c) AS n FROM raw_cnt),
+allb AS (SELECT unnest(range(0, {buckets})) AS b),
+ratio AS (
+  SELECT allb.b,
+         ROUND(ln((COALESCE(t.c, 0) + 1.0) / (nt.n + {buckets}))
+               - ln((COALESCE(r.c, 0) + 1.0) / (nr.n + {buckets})), 6) AS lr
+  FROM allb LEFT JOIN raw_cnt r ON allb.b = r.b
+            LEFT JOIN tgt_cnt t ON allb.b = t.b, nt, nr
+), rarr AS (SELECT list(lr ORDER BY b) AS arr FROM ratio),
+scored AS (
+  SELECT doc_id, len(fb) AS n_feats,
+         list_reduce(
+           list_prepend(CAST(0.0 AS DOUBLE),
+                        list_transform(fb, x -> arr[CAST(x + 1 AS INT)])),
+           (a, y) -> a + y) AS w
+  FROM fb, rarr
+)
+"""
+
+
+def _dsir_sql(buckets: int = 256, combine: int = 1000003) -> str:
+    return (
+        _dsir_ctes(buckets, combine)
+        + """
+SELECT doc_id, CAST(n_feats AS INT) AS n_feats, ROUND(w, 4) AS weight
+FROM scored ORDER BY w DESC, doc_id LIMIT 20
+"""
+    )
+
+
+def ds_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Leakage-guarded train/val split: near-dup clusters (MinHash-LSH →
+    connected components) split as UNITS, so no near-duplicate of a
+    training doc lands in val (``operators/split.py::
+    leakage_safe_split``; Lee et al. 2022)."""
+    from ..operators.split import leakage_safe_split
+
+    d = load_table(spark, sf_dir, "documents")
+    return leakage_safe_split(d, val_pct=20, seed=23).orderBy("doc_id")
+
+
+def _leakage_split_sql(
+    val_pct: int = 20, seed: int = 23, num_perm: int = 16, bands: int = 4
+) -> str:
+    from ..operators.split import shuffle_hash_sql
+
+    h = shuffle_hash_sql("cluster_id", seed)
+    return (
+        "WITH RECURSIVE "
+        + _minhash_pairs_ctes(num_perm, bands)
+        + f"""
+, sym AS (
+  SELECT id_a AS a, id_b AS b FROM pairs
+  UNION ALL
+  SELECT id_b, id_a FROM pairs
+), reach(node, r) AS (
+  SELECT DISTINCT a, a FROM sym
+  UNION
+  SELECT s.a, reach.r FROM sym s JOIN reach ON s.b = reach.node
+), roots AS (
+  SELECT node, MIN(r) AS root FROM reach GROUP BY node
+), rooted AS (
+  SELECT d.doc_id, CAST(COALESCE(roots.root, d.doc_id) AS BIGINT) AS cluster_id
+  FROM documents d LEFT JOIN roots ON d.doc_id = roots.node
+)
+SELECT doc_id, cluster_id,
+       CASE WHEN ({h}) % 100 < {val_pct} THEN 'val' ELSE 'train' END AS split
+FROM rooted ORDER BY doc_id
+"""
+    )
+
+
+def tx_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """CCNet-style LM fluency filter (Wenzek et al. 2020) with the
+    in-engine hashed bigram model: train on the English slice (two
+    bucket-keyed aggregates), score every document in one zero-shuffle
+    pass, top-20 by mean log-prob (``operators/selection.py::
+    bigram_lm_scores``)."""
+    from ..operators.selection import bigram_lm_scores
+
+    d = load_table(spark, sf_dir, "documents")
+    target = d.filter(F.col("lang") == "en")
+    s = bigram_lm_scores(d, target, buckets=256)
+    return (
+        s.filter(F.col("n_bigrams") > 0)
+        .select(
+            "doc_id",
+            "n_bigrams",
+            F.round("ll", 4).alias("ll"),
+            F.round(F.col("ll") / F.col("n_bigrams"), 6).alias("mlp"),
+        )
+        .orderBy(F.col("mlp").desc(), "doc_id")
+        .limit(20)
+    )
+
+
+def _bigram_lm_sql(buckets: int = 256, combine: int = 1000003) -> str:
+    ch = _char_hash_sql("s")
+    return f"""
+WITH toks AS (
+  SELECT doc_id, lang, {TOKENS_SQL} AS t FROM documents
+), th AS (
+  SELECT doc_id, lang, list_transform(t, s -> {ch}) AS h FROM toks
+), feats AS (
+  SELECT doc_id, lang,
+         CASE WHEN len(h) >= 2 THEN
+           list_transform(range(1, len(h)),
+                          i -> ((h[i] * {combine} + h[i+1]) % 2147483648) % {buckets})
+         ELSE [] END AS bg,
+         CASE WHEN len(h) >= 2 THEN
+           list_transform(h[1:len(h)-1], x -> x % {buckets})
+         ELSE [] END AS cx
+  FROM th
+), big_cnt AS (
+  SELECT b, COUNT(*) AS c
+  FROM (SELECT unnest(bg) AS b FROM feats WHERE lang = 'en') GROUP BY b
+), ctx_cnt AS (
+  SELECT b, COUNT(*) AS c
+  FROM (SELECT unnest(cx) AS b FROM feats WHERE lang = 'en') GROUP BY b
+), allb AS (SELECT unnest(range(0, {buckets})) AS b),
+lnum AS (
+  SELECT allb.b, ROUND(ln(COALESCE(big_cnt.c, 0) + 1.0), 6) AS v
+  FROM allb LEFT JOIN big_cnt ON allb.b = big_cnt.b
+), lden AS (
+  SELECT allb.b, ROUND(ln(COALESCE(ctx_cnt.c, 0) + {buckets}.0), 6) AS v
+  FROM allb LEFT JOIN ctx_cnt ON allb.b = ctx_cnt.b
+), narr AS (SELECT list(v ORDER BY b) AS nu FROM lnum),
+darr AS (SELECT list(v ORDER BY b) AS de FROM lden),
+scored AS (
+  SELECT doc_id, len(bg) AS n_bigrams,
+         list_reduce(
+           list_prepend(CAST(0.0 AS DOUBLE),
+             list_transform(range(1, len(bg) + 1),
+               i -> nu[CAST(bg[i] + 1 AS INT)] - de[CAST(cx[i] + 1 AS INT)])),
+           (a, y) -> a + y) AS ll
+  FROM feats, narr, darr
+)
+SELECT doc_id, CAST(n_bigrams AS INT) AS n_bigrams,
+       ROUND(ll, 4) AS ll, ROUND(ll / n_bigrams, 6) AS mlp
+FROM scored WHERE n_bigrams > 0
+ORDER BY mlp DESC, doc_id LIMIT 20
+"""
+
+
+def ds_dsir_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """DSIR importance RESAMPLING: Gumbel-top-25 over the log-weights —
+    inclusion probability ∝ exp(weight), deterministic via the portable
+    LCG draw (``operators/selection.py::gumbel_topk``; the sampling step
+    the DSIR paper pairs with the weights)."""
+    from ..operators.selection import dsir_weights, gumbel_topk
+
+    d = load_table(spark, sf_dir, "documents")
+    target = d.filter(F.col("lang") == "en")
+    w = dsir_weights(d, target, buckets=256)
+    out = gumbel_topk(w, 25)
+    return out.select(
+        "doc_id",
+        "n_feats",
+        F.round("weight", 4).alias("weight"),
+        F.col("_gkey").alias("gkey"),
+    )
+
+
+def _dsir_resample_sql(buckets: int = 256, combine: int = 1000003) -> str:
+    from ..operators.selection import gumbel_topk_sql
+
+    inner = gumbel_topk_sql("scored", 25, id_col="doc_id", weight_col="w")
+    return (
+        _dsir_ctes(buckets, combine)
+        + f"""
+SELECT doc_id, CAST(n_feats AS INT) AS n_feats,
+       ROUND(w, 4) AS weight, _gkey AS gkey
+FROM ({inner})
+"""
+    )
+
+
+def sim_ivf_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF + int8 ADC two-stage ANN as a declared query
+    (``operators/similarity.py::topk_cosine_ivf_adc``): 4 deterministic
+    coarse cells (the k lowest-id vectors — kmeanspp_lite), nprobe=2,
+    int8 codes scored in the probed cells, float re-rank of the top 20.
+    Every stage — assignment argmax, quantization, approximate rank,
+    re-scored top-5 — is re-derived exactly by the oracle, upgrading the
+    ADC path from recall-tested to value-checked."""
+    e = load_table(spark, sf_dir, "embeddings").withColumn(
+        "embedding", F.col("embedding").cast("array<double>")
+    )
+    q = e.filter(F.col("vec_id") < 5)
+    cents = sim.train_centroids_kmeanspp_lite(e, 4)
+    out = sim.topk_cosine_ivf_adc(e, q, cents, k=5, nprobe=2)
+    return out.select(
+        "q_id", "c_id", F.round("score", 6).alias("score"), "rank"
+    ).orderBy("q_id", "rank")
+
+
+SIM_IVF_ADC_SQL = """
+WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+cents AS (
+  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cell, v AS cv
+  FROM (SELECT vec_id, v FROM e ORDER BY vec_id LIMIT 4)
+),
+asg AS (
+  SELECT vec_id, v, cell FROM (
+    SELECT e.vec_id, e.v, c.cell,
+           row_number() OVER (PARTITION BY e.vec_id ORDER BY
+             list_dot_product(e.v, c.cv) /
+             (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(c.cv, c.cv))) DESC,
+             c.cell) AS rn
+    FROM e CROSS JOIN cents c) WHERE rn = 1
+),
+codes AS (
+  SELECT vec_id, cell,
+         list_transform(v, x ->
+           CAST(LEAST(127, GREATEST(-127, CAST(round(x / s) AS INT))) AS DOUBLE)) AS qc
+  FROM (SELECT vec_id, cell, v,
+               greatest(list_max(list_transform(v, x -> abs(x))), 1e-12) / 127.0 AS s
+        FROM asg)
+),
+q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < 5),
+qcells AS (
+  SELECT q_id, qv, cell FROM (
+    SELECT q.q_id, q.qv, c.cell,
+           row_number() OVER (PARTITION BY q.q_id ORDER BY
+             list_dot_product(q.qv, c.cv) /
+             (sqrt(list_dot_product(q.qv, q.qv)) * sqrt(list_dot_product(c.cv, c.cv))) DESC,
+             c.cell DESC) AS rn
+    FROM q CROSS JOIN cents c) WHERE rn <= 2
+),
+approx AS (
+  SELECT q_id, qv, c.vec_id AS c_id,
+         list_dot_product(qv, qc) /
+         (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(qc, qc))) AS a
+  FROM qcells JOIN codes c USING (cell)
+  WHERE c.vec_id <> q_id
+),
+short AS (
+  SELECT q_id, qv, c_id FROM (
+    SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY a DESC, c_id) AS arn
+    FROM approx) WHERE arn <= 20
+),
+resc AS (
+  SELECT q_id, s.c_id,
+         list_dot_product(qv, e.v) /
+         (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(e.v, e.v))) AS sc
+  FROM short s JOIN e ON e.vec_id = s.c_id
+),
+ranked AS (
+  SELECT q_id, c_id, sc,
+         row_number() OVER (PARTITION BY q_id ORDER BY sc DESC, c_id) AS rank
+  FROM resc
+)
+SELECT q_id, c_id, ROUND(sc, 6) AS score, CAST(rank AS INT) AS rank
+FROM ranked WHERE rank <= 5
+ORDER BY q_id, rank
+"""
+
+
+def sim_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF-PQ two-stage ANN as a declared query
+    (``operators/similarity.py::topk_cosine_ivf_pq``): 4 deterministic
+    coarse cells, nprobe=2, PQ codes (m=4 subspaces × 8 codewords =
+    4 bytes/vector vs 64 for SQ8) scored via reconstruction in the
+    probed cells, float re-rank of the top 20.  Deterministic lite
+    codebooks let the oracle re-derive encode → decode → approximate
+    rank → rescore bit-for-bit, so the PQ machinery is value-checked,
+    not just recall-tested."""
+    # r13: measured WITHOUT the _parallel hop (interleaved A/B med
+    # 1.91 s plain vs 2.01 s hopped) — the fused pq_block Arrow kernel
+    # removed the per-row interpreted cost the 32-way layout was
+    # parallelizing; 2000 rows vectorize in one batch
+    e = load_table(spark, sf_dir, "embeddings").withColumn(
+        "embedding", F.col("embedding").cast("array<double>")
+    )
+    q = e.filter(F.col("vec_id") < 5)
+    cents = sim.train_centroids_kmeanspp_lite(e, 4)
+    books = sim.train_pq_codebooks_lite(e, m=4, ks=8)
+    out = sim.topk_cosine_ivf_pq(e, q, cents, books, k=5, nprobe=2)
+    return out.select(
+        "q_id", "c_id", F.round("score", 6).alias("score"), "rank"
+    ).orderBy("q_id", "rank")
+
+
+def sim_ivf_pq_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Serving twin of ``sim_ivf_pq`` (VERDICT r5 task 6): the identical
+    query answered from the PERSISTED IVF-PQ index
+    (``write_ivf_index`` + ``topk_cosine_ivf_pq_indexed``).  The
+    training + encode + index write run once per testdata fingerprint
+    (offline on a real cluster); what this query times is the
+    scale-relevant serving path — probed-cell partition pruning, m-byte
+    PQ codes in the approximate scan, broadcast-shortlist float
+    rescore.  Same deterministic quantizer/codebooks as ``sim_ivf_pq``,
+    so the result — and the oracle — are identical."""
+    e = load_table(spark, sf_dir, "embeddings").withColumn(
+        "embedding", F.col("embedding").cast("array<double>")
+    )
+    q = e.filter(F.col("vec_id") < 5)
+    path = _index_cache_path(sf_dir, "embeddings.parquet", "ivf_pq")
+
+    def _build():
+        cents = sim.train_centroids_kmeanspp_lite(e, 4)
+        books = sim.train_pq_codebooks_lite(e, m=4, ks=8)
+        sim.write_ivf_index(e, cents, path, pq_codebooks=books)
+
+    _cached_index(path, _build)
+    out = sim.topk_cosine_ivf_pq_indexed(spark, path, q, k=5, nprobe=2)
+    return out.select(
+        "q_id", "c_id", F.round("score", 6).alias("score"), "rank"
+    ).orderBy("q_id", "rank")
+
+
+SIM_IVF_PQ_SQL = """
+WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+cents AS (
+  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cell, v AS cv
+  FROM (SELECT vec_id, v FROM e ORDER BY vec_id LIMIT 4)
+),
+asg AS (
+  SELECT vec_id, v, cell FROM (
+    SELECT e.vec_id, e.v, c.cell,
+           row_number() OVER (PARTITION BY e.vec_id ORDER BY
+             list_dot_product(e.v, c.cv) /
+             (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(c.cv, c.cv))) DESC,
+             c.cell) AS rn
+    FROM e CROSS JOIN cents c) WHERE rn = 1
+),
+cb AS (
+  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS j, v
+  FROM (SELECT vec_id, v FROM e ORDER BY vec_id LIMIT 8)
+),
+enc AS (
+  SELECT vec_id, s, j AS code FROM (
+    SELECT e.vec_id, s.s, cb.j,
+           row_number() OVER (PARTITION BY e.vec_id, s.s ORDER BY
+             list_sum(list_transform(range(1, 17),
+               i -> (e.v[s.s*16 + i] - cb.v[s.s*16 + i]) * (e.v[s.s*16 + i] - cb.v[s.s*16 + i]))),
+             cb.j) AS rn
+    FROM e CROSS JOIN range(0, 4) AS s(s) CROSS JOIN cb) WHERE rn = 1
+),
+vh AS (
+  SELECT vec_id, flatten(list(cw ORDER BY s)) AS vhat FROM (
+    SELECT enc.vec_id, enc.s, cb.v[enc.s*16 + 1 : (enc.s + 1)*16] AS cw
+    FROM enc JOIN cb ON cb.j = enc.code)
+  GROUP BY vec_id
+),
+q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < 5),
+qcells AS (
+  SELECT q_id, qv, cell FROM (
+    SELECT q.q_id, q.qv, c.cell,
+           row_number() OVER (PARTITION BY q.q_id ORDER BY
+             list_dot_product(q.qv, c.cv) /
+             (sqrt(list_dot_product(q.qv, q.qv)) * sqrt(list_dot_product(c.cv, c.cv))) DESC,
+             c.cell DESC) AS rn
+    FROM q CROSS JOIN cents c) WHERE rn <= 2
+),
+approx AS (
+  SELECT q_id, qv, a.vec_id AS c_id,
+         list_dot_product(qv, vh.vhat) /
+         (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(vh.vhat, vh.vhat))) AS a
+  FROM qcells JOIN asg a USING (cell) JOIN vh ON vh.vec_id = a.vec_id
+  WHERE a.vec_id <> q_id
+),
+short AS (
+  SELECT q_id, qv, c_id FROM (
+    SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY a DESC, c_id) AS arn
+    FROM approx) WHERE arn <= 20
+),
+resc AS (
+  SELECT q_id, s.c_id,
+         list_dot_product(qv, e.v) /
+         (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(e.v, e.v))) AS sc
+  FROM short s JOIN e ON e.vec_id = s.c_id
+),
+ranked AS (
+  SELECT q_id, c_id, sc,
+         row_number() OVER (PARTITION BY q_id ORDER BY sc DESC, c_id) AS rank
+  FROM resc
+)
+SELECT q_id, c_id, ROUND(sc, 6) AS score, CAST(rank AS INT) AS rank
+FROM ranked WHERE rank <= 5
+ORDER BY q_id, rank
+"""
+
+
+def sim_ann_lsh_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """AND-OR amplified ANN: 3 independent 9-plane tables, OR'd — the
+    recall-amplified scale path (recall floor pinned in
+    tests/test_scale_ops.py; candidates ≈ single-table multi-probe at
+    nprobe=2 budget)."""
+    e = load_table(spark, sf_dir, "embeddings").withColumn(
+        "embedding", F.col("embedding").cast("array<double>")
+    )
+    q = e.filter(F.col("vec_id") < 10)
+    out = sim.topk_cosine_lsh_tables(e, q, dim=64, k=5, planes=9, tables=3)
+    return out.select(
+        "q_id", "c_id", F.round("score", 6).alias("score"), "rank"
+    ).orderBy("q_id", "rank")
+
+
+def _ann_lsh_tables_sql(dim: int = 64, planes: int = 9, tables: int = 3) -> str:
+    def bucket_expr(seed: int) -> str:
+        hps = sim._hyperplanes(dim, planes, seed)
+        return " + ".join(
+            f"(CASE WHEN list_dot_product(v, {hp!r}::DOUBLE[]) >= 0 "
+            f"THEN {1 << i} ELSE 0 END)"
+            for i, hp in enumerate(hps)
+        )
+
+    buckets = ",\n         ".join(
+        f"({bucket_expr(11 + 101 * t)}) AS b{t}" for t in range(tables)
+    )
+    or_cond = " OR ".join(f"e.b{t} = q.b{t}" for t in range(tables))
+    bsel = ", ".join(f"b{t}" for t in range(tables))
+    return f"""
+WITH e AS (
+  SELECT vec_id, embedding::DOUBLE[] AS v,
+         {buckets}
+  FROM embeddings
+), q AS (SELECT vec_id AS q_id, v AS qv, {bsel} FROM e WHERE vec_id < 10),
+scored AS (
+  SELECT q.q_id, e.vec_id AS c_id,
+         list_dot_product(qv, v) /
+         (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(v, v))) AS s
+  FROM q JOIN e ON ({or_cond}) AND e.vec_id <> q.q_id
+), ranked AS (
+  SELECT q_id, c_id, s,
+         row_number() OVER (PARTITION BY q_id ORDER BY s DESC, c_id) AS rank
+  FROM scored
+)
+SELECT q_id, c_id, ROUND(s, 6) AS score, CAST(rank AS INT) AS rank
+FROM ranked WHERE rank <= 5
+ORDER BY q_id, rank
+"""
+
+
+_CHUNK = 16  # tokens per training chunk (small so the testdata multi-chunks)
+
+
+def tx_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Context-window chunking: split every document into fixed-size
+    token chunks (the flatMap that feeds sequence packing / RAG
+    indexing).  Narrow per-doc arithmetic — tokens staged once behind a
+    projection, then one explode over the chunk indices; no shuffle
+    until the presentation sort."""
+    d = load_table(spark, sf_dir, "documents")
+    t = d.select("doc_id", tx.tokens(F.col("text")).alias("_t")).filter(
+        F.size("_t") > 0
+    )
+    nchunks = F.ceil(F.size("_t") / F.lit(float(_CHUNK))).cast("int")
+    c = t.select(
+        "doc_id",
+        "_t",
+        F.explode(F.sequence(F.lit(0), nchunks - 1)).alias("chunk_idx"),
+    )
+    return c.select(
+        "doc_id",
+        F.col("chunk_idx").cast("int").alias("chunk_idx"),
+        F.least(
+            F.lit(_CHUNK), F.size("_t") - F.col("chunk_idx") * _CHUNK
+        ).cast("int").alias("n_tok"),
+        F.element_at("_t", F.col("chunk_idx") * _CHUNK + 1).alias("first_token"),
+    ).orderBy("doc_id", "chunk_idx")
+
+
+TX_CHUNK_SQL = f"""
+WITH t AS (SELECT doc_id, {TOKENS_SQL} AS t FROM documents),
+c AS (SELECT doc_id, t,
+             unnest(range(0, CAST(ceil(len(t) / {float(_CHUNK)}) AS BIGINT))) AS ci
+      FROM t WHERE len(t) > 0)
+SELECT doc_id, CAST(ci AS INT) AS chunk_idx,
+       CAST(LEAST({_CHUNK}, len(t) - ci * {_CHUNK}) AS INT) AS n_tok,
+       t[ci * {_CHUNK} + 1] AS first_token
+FROM c ORDER BY doc_id, chunk_idx
+"""
+
+
+_PACK_CAP = 128  # tokens per packed training bin
+
+
+def tx_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Greedy sequence packing per source shard (first-fit-contiguous,
+    capacity 128 tokens): per-bin document counts, token fill, and the
+    id checksum — the curation→batch-assembly bridge.  Sequential per
+    shard via applyInPandas; the oracle replays the identical
+    recurrence as a recursive CTE."""
+    from ..operators.packing import pack_greedy
+
+    d = load_table(spark, sf_dir, "documents")
+    t = d.select(
+        "source", "doc_id", tx.token_count(F.col("text")).alias("ntok")
+    )
+    packed = pack_greedy(t, "source", "doc_id", "ntok", _PACK_CAP)
+    return (
+        packed.groupBy("source", "bin_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum("ntok").alias("fill_tokens"),
+            F.sum("doc_id").alias("sum_ids"),
+        )
+        .orderBy("source", "bin_id")
+    )
+
+
+def _tx_packing_sql() -> str:
+    from ..operators.packing import pack_recurrence_sql
+
+    body = pack_recurrence_sql(
+        f"SELECT source, doc_id, len({TOKENS_SQL}) AS ntok FROM documents",
+        "source",
+        "doc_id",
+        "ntok",
+        _PACK_CAP,
+    )
+    return f"""
+SELECT source, bin_id, COUNT(*) AS n_docs,
+       CAST(SUM(ntok) AS BIGINT) AS fill_tokens,
+       CAST(SUM(doc_id) AS BIGINT) AS sum_ids
+FROM ({body})
+GROUP BY source, bin_id
+ORDER BY source, bin_id
+"""
+
+
+def sim_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-label embedding centroids — the distributed vector-mean shape
+    (the k-means update step as a declared, oracle-checked query):
+    posexplode to (label, dim, x), one groupBy whose key space is
+    labels·dim.  At 100 TB only label·dim aggregates cross the exchange,
+    never vectors."""
+    e = load_table(spark, sf_dir, "embeddings").withColumn(
+        "v", F.col("embedding").cast("array<double>")
+    )
+    return (
+        e.select("label", F.posexplode("v").alias("dim", "x"))
+        .groupBy("label", "dim")
+        .agg(F.round(F.avg("x"), 6).alias("avg_v"))
+        .orderBy("label", "dim")
+    )
+
+
+SIM_CENTROIDS_SQL = """
+WITH ex AS (
+  SELECT label, unnest(embedding::DOUBLE[]) AS x,
+         generate_subscripts(embedding, 1) AS i
+  FROM embeddings)
+SELECT label, CAST(i - 1 AS INT) AS dim, ROUND(AVG(x), 6) AS avg_v
+FROM ex GROUP BY 1, 2 ORDER BY label, dim
+"""
+
+
+def tx_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Gopher-style repetition / stopword quality rules (Rae et al. 2021
+    §A1.1, public): per language, how many docs trip the
+    duplicate-3-gram rule (repetition_ratio > 0.01) or the low-stopword
+    rule (stopword_ratio < 0.03), plus the mean ratios.  Pure column
+    expressions — scan-stage work, one aggregate."""
+    d = load_table(spark, sf_dir, "documents")
+    rep = tx.repetition_ratio(F.col("text"))
+    stw = tx.stopword_ratio(F.col("text"))
+    return (
+        d.select("lang", rep.alias("_rep"), stw.alias("_stw"))
+        .groupBy("lang")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum((F.col("_rep") > 0.01).cast("int")).alias("n_repetitive"),
+            F.sum((F.col("_stw") < 0.03).cast("int")).alias("n_low_stopword"),
+            F.round(F.avg("_rep"), 4).alias("avg_repetition"),
+            F.round(F.avg("_stw"), 4).alias("avg_stopword"),
+        )
+        .orderBy("lang")
+    )
+
+
+_STOPWORDS_SQL = "[" + ",".join(f"'{w}'" for w in tx.STOPWORDS["en"]) + "]"
+TX_GOPHER_SQL = f"""
+WITH t AS (SELECT lang, {TOKENS_SQL} AS t FROM documents),
+s AS (SELECT lang,
+        CASE WHEN len(t) >= 3
+             THEN list_transform(range(0, len(t) - 2),
+                                 i -> t[i+1] || ' ' || t[i+2] || ' ' || t[i+3])
+             ELSE [array_to_string(t, ' ')] END AS sh,
+        len(t) AS nt,
+        len(list_filter(t, x -> list_contains({_STOPWORDS_SQL}, x))) AS nstop
+      FROM t),
+r AS (SELECT lang,
+        CASE WHEN len(sh) > 0
+             THEN 1.0 - CAST(len(list_distinct(sh)) AS DOUBLE) / len(sh)
+             ELSE 0.0 END AS rep,
+        CASE WHEN nt > 0 THEN CAST(nstop AS DOUBLE) / nt ELSE 0.0 END AS stw
+      FROM s)
+SELECT lang, COUNT(*) AS n,
+       CAST(SUM(CASE WHEN rep > 0.01 THEN 1 ELSE 0 END) AS BIGINT) AS n_repetitive,
+       CAST(SUM(CASE WHEN stw < 0.03 THEN 1 ELSE 0 END) AS BIGINT) AS n_low_stopword,
+       ROUND(AVG(rep), 4) AS avg_repetition,
+       ROUND(AVG(stw), 4) AS avg_stopword
+FROM r GROUP BY lang ORDER BY lang
+"""
+
+
+def _span_removal_ctes(src: str, tag: str = "") -> str:
+    """CTE chain for duplicate-span removal over any doc relation
+    ``src`` (must expose doc_id, text): final CTE ``srout{tag}`` has
+    (doc_id, clean_text, n_removed) for EVERY src document."""
+    t = tag
+    return f"""
+toks{t} AS (SELECT doc_id, {TOKENS_SQL} AS t FROM {src}),
+grams{t} AS (
+  SELECT doc_id, i AS pos, array_to_string(list_slice(t, i, i + 4), ' ') AS g
+  FROM toks{t}, LATERAL (SELECT unnest(range(1, len(t) - 3)) AS i)
+),
+dupg{t} AS (SELECT g FROM grams{t} GROUP BY g HAVING COUNT(DISTINCT doc_id) >= 2),
+hits{t} AS (SELECT doc_id, pos FROM grams{t} WHERE g IN (SELECT g FROM dupg{t})),
+brk{t} AS (
+  SELECT doc_id, pos,
+         CASE WHEN pos - lag(pos) OVER (PARTITION BY doc_id ORDER BY pos) > 5
+              THEN 1 ELSE 0 END AS b
+  FROM hits{t}
+),
+isl{t} AS (
+  SELECT doc_id, pos,
+         SUM(b) OVER (PARTITION BY doc_id ORDER BY pos) AS island
+  FROM brk{t}
+),
+spans{t} AS (
+  SELECT doc_id, MIN(pos) AS span_start, MAX(pos) - MIN(pos) + 5 AS span_len
+  FROM isl{t} GROUP BY doc_id, island
+),
+srpos{t} AS (
+  SELECT doc_id, i, t[i] AS tok
+  FROM toks{t}, LATERAL (SELECT unnest(range(1, len(t) + 1)) AS i)
+),
+srkeep{t} AS (
+  SELECT p.doc_id, p.i, p.tok FROM srpos{t} p
+  WHERE NOT EXISTS (
+    SELECT 1 FROM spans{t} s
+    WHERE s.doc_id = p.doc_id
+      AND p.i >= s.span_start AND p.i < s.span_start + s.span_len)
+),
+sragg{t} AS (
+  SELECT doc_id, string_agg(tok, ' ' ORDER BY i) AS ct, COUNT(*) AS nk
+  FROM srkeep{t} GROUP BY doc_id
+),
+srout{t} AS (
+  SELECT t.doc_id,
+         COALESCE(a.ct, '') AS clean_text,
+         CAST(len(t.t) - COALESCE(a.nk, 0) AS BIGINT) AS n_removed
+  FROM toks{t} t LEFT JOIN sragg{t} a ON a.doc_id = t.doc_id
+)"""
+
 REGISTRY = {
     "dd_exact": (dd_exact, DD_EXACT_SQL),
+    "dd_jaccard_pairs": (dd_jaccard_pairs, DD_JACCARD_SQL),
+    "dd_minhash_lsh": (dd_minhash_lsh, _minhash_sql()),
+    "dd_incremental": (dd_incremental, _incremental_sql()),
+    "dd_cluster": (dd_cluster, _cluster_sql()),
+    "dd_cluster_best": (dd_cluster_best, _cluster_best_sql()),
+    "ds_contrastive_pairs": (ds_contrastive_pairs, _contrastive_sql()),
+    "tx_gopher_rules": (tx_gopher_rules, TX_GOPHER_SQL),
+    "tx_chunking": (tx_chunking, TX_CHUNK_SQL),
+    "tx_packing": (tx_packing, _tx_packing_sql()),
+    "dd_simhash": (dd_simhash, _simhash_sql()),
+    "dd_simhash_pairs": (dd_simhash_pairs, _simhash_pairs_sql()),
+    "sim_topk_cosine": (sim_topk_cosine, SIM_TOPK_SQL),
+    "sim_ivf_adc": (sim_ivf_adc, SIM_IVF_ADC_SQL),
+    "sim_ivf_pq": (sim_ivf_pq, SIM_IVF_PQ_SQL),
+    "sim_ivf_pq_serve": (sim_ivf_pq_serve, SIM_IVF_PQ_SQL),
+    "ds_dsir_select": (ds_dsir_select, _dsir_sql()),
+    "ds_dsir_resample": (ds_dsir_resample, _dsir_resample_sql()),
+    "sim_ann_lsh": (sim_ann_lsh, _ann_lsh_sql()),
+    "sim_ann_lsh_tables": (sim_ann_lsh_tables, _ann_lsh_tables_sql()),
+    "sim_label_centroids": (sim_label_centroids, SIM_CENTROIDS_SQL),
+    "tx_bigram_lm": (tx_bigram_lm, _bigram_lm_sql()),
+    "ds_leakage_safe_split": (ds_leakage_safe_split, _leakage_split_sql()),
 }

@@ -76,3 +76,31 @@ def get_spark(
         builder = builder.config(k, v)
     return builder.getOrCreate()
 
+
+def release_checkpoint(df) -> None:
+    """Eagerly free a SUPERSEDED ``localCheckpoint``'s storage blocks
+    (r13 opt, guide §5 "unpersist when done").
+
+    ContextCleaner reclaims checkpoint blocks only after the driver JVM
+    garbage-collects the owning RDD object, so in a long-running session
+    a pipeline that checkpoints stage after stage (curation chains,
+    PageRank phases) strands every superseded stage's blocks in the
+    unified memory region until some eventual full GC — evicting useful
+    blocks and inflating pauses (measured: cur_pipeline_v2 degraded
+    9.0 -> 25.6 s over 7 back-to-back sf0.1 passes from accumulation
+    alone).  Pipelines call this the moment a checkpoint's every
+    consumer has itself been materialized.
+
+    Safety: a localCheckpoint's blocks are the ONLY copy of its data
+    (lineage is truncated), so releasing one that a live plan still
+    references makes that plan's next action fail LOUDLY with
+    ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND`` — a caller bug is an error,
+    never silent wrong results.  No-op under Spark Connect (no local
+    JVM handle) and on non-checkpoint DataFrames.
+    """
+    try:
+        lp = df._jdf.queryExecution().analyzed()
+        if lp.getClass().getSimpleName() == "LogicalRDD":
+            lp.rdd().unpersist(False)
+    except Exception:
+        pass  # best-effort hygiene: Connect plans / already-released

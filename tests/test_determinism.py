@@ -1,8 +1,8 @@
-"""Partition-layout independence: dedup, shuffle, split and batching
-outputs must be IDENTICAL regardless of parallelism (the reproducibility
-contract that lets a 100 TB run be audited on a laptop).  Each query runs
-with the session's shuffle partitions and again with a different
-shuffle-partition setting; result sets must match exactly."""
+"""Partition-layout independence: curation outputs must be IDENTICAL
+regardless of parallelism (the reproducibility contract that lets a
+100 TB run be audited on a laptop).  Each query runs with the session's
+32 shuffle partitions and again over a repartitioned input with a
+different shuffle-partition setting; result sets must match exactly."""
 
 from __future__ import annotations
 
@@ -13,14 +13,126 @@ from asid_v2_data_pipeline_spark.queries import all_queries
 SF = "/root/testdata/sf0.001"
 
 CASES = [
+    "sp_group_quota",
+    "sp_stratified",
+    "sp_mixture",
     "dd_exact",
+    "dd_minhash_lsh",
+    "dd_incremental",
+    "dc_contamination",
+    "tx_length_quantiles",
+    "cur_pipeline",
     "o2_shuffled_sample",
-    # two-phase global numbering and correlated shapes must be
-    # layout-independent too
+    # round 3: two-phase global numbering, correlated shapes, multi-table
+    # LSH, chunking — all must be layout-independent too
     "o3_fraction_split",
     "o4_drop_last_batches",
     "q17_small_quantity",
     "q20_dominant_suppliers",
+    "sim_ann_lsh_tables",
+    "tx_chunking",
+    "t_rollup_daily",
+    # round 3 later additions: projection, semantic dedup, cube,
+    # retrieval, quantization, gap-fill
+    "sim_random_projection",
+    "dd_semantic",
+    "t_cube_hourly",
+    "tx_bm25_search",
+    "sim_quantize_int8",
+    "t_gapfill_hourly",
+    "sp_weighted_sample",
+    "tx_top_quality_per_lang",
+    # round 5: sketches, fuzzy/bloom decontam, classifier, spans, BPE,
+    # contrastive triples, v2 flagship — same contract
+    "sk_cms_top_tokens",
+    "sk_hll_distinct",
+    "sk_quantile_by_group",
+    "dc_fuzzy_contamination",
+    "dc_bloom_prefilter",
+    "tx_classifier_score",
+    "dd_span_removal",
+    "tx_bpe_pairs",
+    "ds_contrastive_pairs",
+    "dd_cluster_best",
+    "cur_pipeline_v2",
+    "t_anomaly_zscore",
+    # round 6: lossy-codec pool, container demux/metadata, spectral
+    # features, frozen-vocab encoding, persisted-index serving
+    "mm_jpeg_pool",
+    "mm_mkv_demux",
+    "mm_id3_tags",
+    "mm_mp3_meta",
+    "mm_wav_dft",
+    "tx_bpe_encode",
+    "tx_tokenize_pack",
+    "sim_ivf_pq_serve",
+    "tx_bm25_serve",
+    # round 7: MJPEG-in-MKV end-to-end frame decode, FLAC lossless
+    # audio + FLAC-in-MKV reassembly
+    "mm_mkv_jpeg_pool",
+    "mm_flac_rms",
+    "mm_mkv_flac_rms",
+    "gr_pagerank",
+    "mm_audio_curation",
+    "gr_pagerank_weighted",
+    "mm_audio_incremental",
+    "mm_gif_frames",
+    # round 8: MP3 Layer III sample decode (mono + stereo), warm-start
+    # PageRank
+    "mm_mp3_rms",
+    "mm_mp3_stereo_rms",
+    "mm_mkv_mp3_rms",
+    "mm_mp3_ms_rms",
+    "mm_audio_multicodec",
+    "gr_pagerank_incremental",
+    # round 9: the three-codec funnel (FLAC + MP3 + WAV arms), the
+    # general-profile MP3 stream, intensity joint stereo
+    "mm_audio_multicodec3",
+    "mm_mp3_general",
+    "mm_mp3_intensity_rms",
+    # round 10: progressive JPEG (SOF2 multi-scan) decode + the
+    # quarantining admission funnel
+    "mm_jpeg_progressive",
+    "mm_audio_quarantine",
+    "mm_image_quarantine",
+    # round 10 second pass: web-crawl ingestion (WARC -> HTML -> text)
+    # and the MP4/ISO-BMFF container twins
+    "tx_warc_extract",
+    "cur_warc_pipeline",
+    "tx_warc_quarantine",
+    "mm_mp4_demux",
+    "mm_mp4_mp3_rms",
+    "mm_ogg_flac_rms",
+    "mm_webdataset_shard",
+    "mm_tiff_pool",
+    "mm_audio_multicodec4",
+    "tx_url_canonical",
+    "gr_crawl_pagerank",
+    "tx_zip_extract",
+    "mm_jpeg_lossless_pool",
+    # round 10 fifth/sixth pass: record shards, book/office/markdown
+    # extraction, subtitles, AVI, EXIF, QOI, WebP VP8L
+    "src_tfrecord_scan",
+    "src_msgpack_scan",
+    "tx_epub_extract",
+    "tx_subtitle_extract",
+    "mm_avi_mjpeg_pool",
+    "mm_jpeg_exif",
+    "mm_qoi_pool",
+    "tx_docx_extract",
+    "tx_markdown_extract",
+    "mm_webp_pool",
+    "tx_robots_rules",
+    "src_tfrecord_quarantine",
+    "tx_sitemap_urls",
+    "tx_compress_funnel",
+    "cur_shard_pipeline",
+    "src_csv_scan",
+    "mm_ico_pool",
+    "src_safetensors_scan",
+    "src_npz_scan",
+    "src_arrow_ipc_scan",
+    "mm_raster_funnel",
 ]
 
 

@@ -1,6 +1,6 @@
 """The entry contract in ``__spark_entry__``: the flagship query returns
-rows, and every declared query has a DuckDB oracle — exactly the 50 names
-of the last correctness record."""
+rows, every declared query has a DuckDB oracle, and the queries of the
+last correctness record are all still declared."""
 
 from __future__ import annotations
 
@@ -16,9 +16,12 @@ def test_entry_returns_rows(spark):
     assert entry_mod.entry(spark).count() > 0
 
 
-def test_queries_and_oracles_are_the_recorded_50():
+def test_queries_and_oracles_share_names():
+    assert set(entry_mod.queries()) == set(entry_mod.oracle_sql())
+
+
+def test_recorded_queries_are_declared():
     with open(_RECORD) as f:
         recorded = set(json.load(f))
     assert len(recorded) == 50
-    assert set(entry_mod.queries()) == recorded
-    assert set(entry_mod.oracle_sql()) == recorded
+    assert recorded <= set(entry_mod.queries())

@@ -1,7 +1,6 @@
 """format("netcdf") Python DataSource (S1 idiomatic surface): equality
-with the binaryFile+mapInPandas path, one-partition-per-file planning,
-name pruning at planning time, and the incremental build end-to-end
-(sources/netcdf_datasource.py)."""
+with the binaryFile+mapInPandas path, one-partition-per-file planning
+and name pruning at planning time (sources/netcdf_datasource.py)."""
 
 from __future__ import annotations
 
@@ -101,34 +100,3 @@ def test_masked_values_surface_as_null(spark, tmp_path):
     ).collect()
     assert got[0]["value"] == 15.0
 
-
-def test_incremental_build_via_datasource_matches_binaryfile(spark, tmp_path):
-    """The §3.1 outer loop off format('netcdf') produces the identical
-    pixel table (and ledger behavior) as the binaryFile path."""
-    from asid_v2_data_pipeline_spark.config import PipelineConfig
-    from asid_v2_data_pipeline_spark.plans.incremental import (
-        run_incremental_build,
-    )
-
-    src = tmp_path / "in"
-    src.mkdir()
-    _write_scenes(src)
-    cfg = PipelineConfig(
-        window_sar=4, stride_sar=4, window_amsr2=2, names_sar=VARS
-    )
-    outs = {}
-    for mode, use_ds in (("bin", False), ("ds", True)):
-        out, led = str(tmp_path / f"px_{mode}"), str(tmp_path / f"led_{mode}")
-        n = run_incremental_build(
-            spark, str(src), out, led, cfg, use_datasource=use_ds
-        )
-        assert n == 2
-        outs[mode] = _canon(spark.read.parquet(out))
-        # second run: nothing new -> no work on either path
-        assert (
-            run_incremental_build(
-                spark, str(src), out, led, cfg, use_datasource=use_ds
-            )
-            == 0
-        )
-    assert outs["ds"] == outs["bin"]

@@ -1,17 +1,28 @@
-"""NULL / empty-text contract of exact dedup, pinned.
+"""NULL / empty-text contract of the curation surface, pinned.
 
-The synthetic testdata has no NULL documents; real corpora do.  This
-pins the engine's behavior on hostile rows so it is a *documented
-contract*, not an accident: exact_dedup keeps NULL-key docs as their own
-group (SQL group-by NULL semantics) rather than merging them with empty
-docs.
+The synthetic testdata has no NULL documents; real corpora do.  These
+tests pin the engine's behavior on hostile rows so it is a *documented
+contract*, not an accident:
+
+- scalar text functions propagate NULL (fingerprint, token_count, bm25
+  score) — NULL text never silently becomes a real value;
+- quality_score treats NULL like empty text (the length guards all
+  evaluate false) — it FILTERS like a worst-quality doc, never admits;
+- exact_dedup keeps NULL-fingerprint docs as their own group (SQL
+  group-by NULL semantics) rather than merging them with empty docs;
+- minhash pairing skips NULL docs (NULL signatures join nothing) and
+  treats identical-empty docs as genuine duplicates.
 """
 
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from asid_v2_data_pipeline_spark.functions.text import tokens
-from asid_v2_data_pipeline_spark.operators.dedup import exact_dedup
+from asid_v2_data_pipeline_spark.functions import text as tx
+from asid_v2_data_pipeline_spark.operators.dedup import (
+    exact_dedup,
+    minhash_lsh_pairs,
+)
+from asid_v2_data_pipeline_spark.operators.retrieval import bm25_scores
 
 
 def _corpus(spark):
@@ -25,8 +36,50 @@ def _corpus(spark):
     )
 
 
+def test_scalar_functions_propagate_null(spark):
+    df = _corpus(spark)
+    got = {
+        r["doc_id"]: (r["fp"], r["n"])
+        for r in df.select(
+            "doc_id",
+            tx.fingerprint(F.col("text")).alias("fp"),
+            tx.token_count(F.col("text")).alias("n"),
+        ).collect()
+    }
+    assert got[2] == (None, None)       # NULL in, NULL out
+    assert got[3] == (0, 0)             # empty is a real (zero) value
+    assert got[4][0] == 0               # whitespace-only tokenizes empty
+
+
+def test_quality_score_never_admits_null(spark):
+    df = _corpus(spark)
+    q = {
+        r["doc_id"]: r["q"]
+        for r in df.select(
+            "doc_id", tx.quality_score(F.col("text")).alias("q")
+        ).collect()
+    }
+    assert q[2] == q[3] == q[4] == 0.375  # worst tier, below the 0.5 gate
+    assert q[1] > 0.5
+
+
 def test_exact_dedup_null_is_its_own_group(spark):
-    df = _corpus(spark).withColumn("_key", F.array_join(tokens(F.col("text")), " "))
-    kept = sorted(r["doc_id"] for r in exact_dedup(df, ["_key"], "doc_id").collect())
-    # doc 2 (NULL key) survives separately; docs 3/4 (both tokenize empty) merge
+    df = _corpus(spark).withColumn("_fp", tx.fingerprint(F.col("text")))
+    kept = sorted(r["doc_id"] for r in exact_dedup(df, ["_fp"], "doc_id").collect())
+    # doc 2 (NULL fp) survives separately; docs 3/4 (both fp=0) merge
     assert kept == [1, 2, 3]
+
+
+def test_minhash_skips_null_pairs_empty_dups(spark):
+    pairs = {
+        (r["id_a"], r["id_b"])
+        for r in minhash_lsh_pairs(_corpus(spark), "doc_id", "text").collect()
+    }
+    assert pairs == {(3, 4)}  # the two truly-identical empties; no NULL pair
+
+
+def test_bm25_null_text_scores_null_and_ranks_last(spark):
+    s = bm25_scores(_corpus(spark), ["hello"])
+    ranked = s.orderBy(F.col("score").desc(), "doc_id").collect()
+    assert ranked[0]["doc_id"] == 1
+    assert ranked[-1]["score"] is None  # desc = NULLS LAST, never on top

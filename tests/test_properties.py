@@ -1,12 +1,18 @@
-"""Property-based tests (hypothesis) for pure functions (SURVEY.md §5
-strategy item 4)."""
+"""Property-based tests (hypothesis) for driver-side pure functions, plus
+cross-checks of the engine's portable hashing against a pure-Python
+reimplementation (SURVEY.md §5 strategy item 4)."""
 
 from __future__ import annotations
 
-from hypothesis import given
+from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from asid_v2_data_pipeline_spark.operators.resize import centered_pads
+from asid_v2_data_pipeline_spark.operators.dedup import (
+    COMBINE,
+    MASK31,
+    _perm_constants,
+)
 
 
 @given(
@@ -18,3 +24,428 @@ def test_centered_pads_invariants(in_h, in_w, dh, dw):
     assert top + bottom == dh and left + right == dw
     assert 0 <= bottom - top <= 1  # extra row goes to the bottom
     assert 0 <= right - left <= 1  # extra col goes to the right
+
+
+def _py_char_hash(s: str) -> int:
+    h = 0
+    for ch in s:
+        h = (h * 31 + ord(ch)) % (MASK31 + 1)
+    return h
+
+
+def _py_shingle_hashes(tokens: list[str], n: int = 3) -> list[int]:
+    th = [_py_char_hash(t) for t in tokens]
+    if len(th) >= n:
+        out = []
+        for i in range(len(th) - n + 1):
+            acc = 0
+            for h in th[i : i + n]:
+                acc = (acc * COMBINE + h) % (MASK31 + 1)
+            out.append(acc)
+        seen = set()
+        dedup = []
+        for x in out:
+            if x not in seen:
+                seen.add(x)
+                dedup.append(x)
+        return dedup
+    acc = 0
+    for h in th:
+        acc = (acc * COMBINE + h) % (MASK31 + 1)
+    return [acc]
+
+
+@settings(max_examples=25, deadline=None)
+@given(
+    st.lists(
+        st.text(alphabet="abcdefghij0123456789'", min_size=1, max_size=8),
+        min_size=1,
+        max_size=30,
+    )
+)
+def test_shingle_hash_matches_python_model(spark, tokens):
+    """The Spark expression pipeline equals the pure-Python model for
+    arbitrary token streams (so the DuckDB oracle transliteration has a
+    third, independent witness)."""
+    from pyspark.sql import functions as F
+
+    from asid_v2_data_pipeline_spark.operators.dedup import with_shingle_hashes
+
+    text = " ".join(tokens)
+    df = spark.createDataFrame([(1, text)], "id long, text string")
+    got = with_shingle_hashes(df, "id", "text").collect()[0]["_hs"]
+    # engine tokenization lowercases/splits the same way we joined
+    assert got == _py_shingle_hashes(tokens)
+
+
+def test_perm_constants_are_valid():
+    consts = _perm_constants(64)
+    assert len(set(consts)) == 64  # distinct permutations
+    for a, b in consts:
+        assert a % 2 == 1 and 0 < a < (1 << 31) - 1  # odd multiplier
+        assert 0 <= b < (1 << 31) - 1
+
+
+# --- round-2 curation-operator arithmetic (pure twins) ------------------------
+
+from asid_v2_data_pipeline_spark.operators.split import (
+    SHUFFLE_A,
+    SHUFFLE_C,
+    SHUFFLE_M,
+)
+
+
+def _py_shuffle_hash(key: int, seed: int) -> int:
+    h = (key % SHUFFLE_M + seed) % SHUFFLE_M
+    h = (h * SHUFFLE_A + SHUFFLE_C) % SHUFFLE_M
+    return (h * SHUFFLE_A + SHUFFLE_C) % SHUFFLE_M
+
+
+@given(st.integers(0, 2**62), st.integers(0, 1000), st.floats(0.0, 8.0))
+def test_weighted_repeat_count_bounds(key, seed, w):
+    """The repeat count is always floor(w) or ceil(w), and the extra-copy
+    threshold is exact integer arithmetic (same in both engines)."""
+    from asid_v2_data_pipeline_spark.operators.sampling import _thresholds
+
+    fl = int(w)
+    th = _thresholds({"g": w - fl})["g"]
+    n = fl + (1 if _py_shuffle_hash(key, seed) < th else 0)
+    assert n in (fl, fl + (0 if w == fl else 1))
+    # threshold is monotone in the fraction
+    assert _thresholds({"g": 0.0})["g"] == 0
+    assert _thresholds({"g": 1.0})["g"] == SHUFFLE_M
+
+
+@given(
+    st.lists(st.integers(-1000, 1000), min_size=1, max_size=200),
+    st.sampled_from([(1, 2), (9, 10), (99, 100), (1, 4), (3, 4)]),
+)
+def test_nearest_rank_formula(values, q):
+    """(num·n + den − 1) div den == ceil-rank; the picked element equals
+    the nearest-rank quantile of the sorted list."""
+    import math
+
+    num, den = q
+    n = len(values)
+    rank = (num * n + den - 1) // den
+    assert rank == math.ceil(num * n / den)
+    assert 1 <= rank <= n
+    s = sorted(values)
+    assert s[rank - 1] == sorted(values)[math.ceil(num * n / den) - 1]
+
+
+@given(st.integers(1, 12), st.integers(1, 64))
+def test_perturbation_sets_properties(planes, nprobe):
+    """Probe sequence: starts at the base bucket, patterns are distinct,
+    costs are non-decreasing."""
+    from asid_v2_data_pipeline_spark.operators.similarity import (
+        _perturbation_sets,
+    )
+
+    pats = _perturbation_sets(planes, nprobe)
+    assert pats[0] == ()
+    assert len(pats) == len(set(pats))
+    assert len(pats) <= nprobe if nprobe >= 1 else True
+    costs = [sum(i + 1 for i in p) for p in pats[1:]]
+    assert costs == sorted(costs)
+    assert all(all(0 <= i < planes for i in p) for p in pats)
+
+
+@settings(max_examples=25, deadline=None)
+@given(
+    st.lists(
+        st.floats(-1e6, 1e6, allow_nan=False, allow_infinity=False, width=32),
+        min_size=1,
+        max_size=32,
+    )
+)
+def test_int8_quantizer_roundtrip_bound(spark, vec):
+    """with_int8_codes: every reconstructed component is within s/2 of
+    the input (round-to-nearest on an un-clamped range: |x| <= max|v|
+    implies |x/s| <= 127, so the clamp never bites), codes stay in
+    [-127, 127], and the max-magnitude component maps to ±127."""
+    from pyspark.sql import functions as F
+
+    from asid_v2_data_pipeline_spark.operators.similarity import with_int8_codes
+
+    df = spark.createDataFrame([(1, vec)], "id long, embedding array<double>")
+    row = with_int8_codes(df).collect()[0]
+    codes = row["_q"]
+    s = max(max(abs(x) for x in vec), 1e-12) / 127.0
+    assert all(-127 <= c <= 127 for c in codes)
+    for x, c in zip(vec, codes):
+        assert abs(x - c * s) <= s / 2 + 1e-9 * abs(x)
+    # the max-magnitude component maps to ±127 — unless the whole vector
+    # sits under the 1e-12 degenerate-vector floor, which quantizes to 0
+    if max(abs(x) for x in vec) >= 1e-12:
+        m = max(range(len(vec)), key=lambda i: abs(vec[i]))
+        assert abs(codes[m]) == 127
+
+
+@settings(max_examples=25, deadline=None)
+@given(st.integers(0, 2**31 - 1), st.integers(0, 10_000))
+def test_gumbel_key_model_and_range(spark, seed, doc_id):
+    """gumbel_topk's draw matches the pure-Python model of the portable
+    LCG + inverse-Gumbel transform for arbitrary (seed, id) — the oracle
+    SQL transliteration's independent witness — and u stays strictly
+    inside (0, 1) so the double log never produces inf/nan."""
+    import math
+
+    from pyspark.sql import functions as F
+
+    from asid_v2_data_pipeline_spark.operators.selection import gumbel_topk
+
+    df = spark.createDataFrame(
+        [(doc_id, 0.0)], "doc_id long, weight double"
+    )
+    got = gumbel_topk(df, 1, seed=seed).collect()[0]["_gkey"]
+
+    M, A, C = 1 << 31, 1103515245, 12345
+    h = (doc_id % M + seed) % M
+    h = (h * A + C) % M
+    h = (h * A + C) % M
+    u = (h + 0.5) / M
+    assert 0.0 < u < 1.0
+    assert got == round(0.0 + -math.log(-math.log(u)), 6)
+
+
+def test_gumbel_topk_raises_on_non_numeric_id(spark):
+    """A non-long-castable id would NULL the Gumbel key and silently
+    exclude rows; the draw must raise instead (ADVICE r4)."""
+    import pytest
+    from asid_v2_data_pipeline_spark.operators.selection import gumbel_topk
+
+    df = spark.createDataFrame(
+        [("docA", 0.5), ("7", 0.9)], "doc_id string, weight double"
+    )
+    with pytest.raises(Exception, match="must be numeric"):
+        gumbel_topk(df, 1).collect()
+    # numeric strings are fine — they cast cleanly
+    ok = spark.createDataFrame(
+        [("7", 0.9), ("8", 0.1)], "doc_id string, weight double"
+    )
+    assert gumbel_topk(ok, 1).count() == 1
+
+
+# --- sketch models (pure-Python twins of operators/sketches.py) --------------
+
+
+def _py_cms(items, width, depth):
+    from asid_v2_data_pipeline_spark.operators.dedup import _perm_constants
+
+    consts = _perm_constants(depth, seed=97)
+    cells = {}
+    for h in items:
+        for d, (a, b) in enumerate(consts):
+            k = (d, ((h * a + b) % ((1 << 31) - 1)) % width)
+            cells[k] = cells.get(k, 0) + 1
+    return cells
+
+
+def _py_cms_est(cells, h, width, depth):
+    from asid_v2_data_pipeline_spark.operators.dedup import _perm_constants
+
+    consts = _perm_constants(depth, seed=97)
+    return min(
+        cells.get((d, ((h * a + b) % ((1 << 31) - 1)) % width), 0)
+        for d, (a, b) in enumerate(consts)
+    )
+
+
+@given(
+    st.lists(st.integers(0, (1 << 31) - 1), min_size=1, max_size=200),
+    st.sampled_from([32, 64, 128]),
+    st.sampled_from([2, 3, 4]),
+)
+@settings(max_examples=200, deadline=None)
+def test_cms_model_never_underestimates(items, width, depth):
+    """Pure-Python model of the CMS arithmetic: estimates are one-sided
+    (>= exact) and bounded by the total occurrence count, for arbitrary
+    multisets — the invariant the Spark build inherits because the
+    arithmetic is identical integer math."""
+    cells = _py_cms(items, width, depth)
+    from collections import Counter
+
+    exact = Counter(items)
+    n = len(items)
+    for h, c in exact.items():
+        e = _py_cms_est(cells, h, width, depth)
+        assert c <= e <= n
+
+
+@given(st.lists(st.integers(0, (1 << 31) - 1), min_size=1, max_size=300))
+@settings(max_examples=200, deadline=None)
+def test_hll_rank_model_matches_bit_position(items):
+    """The integer CASE-ladder rank equals the mathematical
+    leftmost-1-bit position for every input — no power-of-two boundary
+    drift (the reason we avoided float log2)."""
+    from asid_v2_data_pipeline_spark.operators.dedup import _perm_constants
+    from asid_v2_data_pipeline_spark.operators.sketches import HLL_RANK_BITS
+
+    a, b = _perm_constants(1, seed=131)[0]
+    for h in items:
+        ph = (h * a + b) % ((1 << 31) - 1)
+        w = (ph >> 6) % (1 << HLL_RANK_BITS)
+        if w == 0:
+            rank = HLL_RANK_BITS + 1
+        else:
+            rank = HLL_RANK_BITS - w.bit_length() + 1
+        # mirror of _rank_expr's ladder
+        ladder = HLL_RANK_BITS + 1
+        for r in range(HLL_RANK_BITS, 0, -1):
+            if w >= 1 << (HLL_RANK_BITS - r):
+                ladder = r
+        assert ladder == rank
+
+
+def test_jpeg_multiblock_roundtrip_property():
+    """Property (round 6): for any size and quality, gray JPEG decode
+    equals the fixed-point reference pipeline applied blockwise to the
+    edge-padded image, cropped back — the exactness the mm_jpeg_pool
+    oracle depends on, at every shape."""
+    import numpy as np
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    from asid_v2_data_pipeline_spark.functions.codecs import (
+        _QUANT_LUMA,
+        _dequant_idct,
+        _fdct_quant,
+        _pad_to_8,
+        _quality_table,
+        parse_jpeg,
+        write_jpeg,
+    )
+
+    @settings(max_examples=30, deadline=None)
+    @given(
+        h=st.integers(1, 20),
+        w=st.integers(1, 20),
+        quality=st.sampled_from([25, 50, 75, 95]),
+        seed=st.integers(0, 2**31 - 1),
+    )
+    def check(h, w, quality, seed):
+        rng = np.random.RandomState(seed)
+        x = rng.randint(0, 256, size=(h, w)).astype(np.uint8)
+        dec = parse_jpeg(write_jpeg(x, quality=quality))
+        assert dec.shape == (h, w)
+        q = _quality_table(_QUANT_LUMA, quality)
+        padded = _pad_to_8(x)
+        ref = np.zeros_like(padded)
+        for by in range(0, padded.shape[0], 8):
+            for bx in range(0, padded.shape[1], 8):
+                blk = padded[by : by + 8, bx : bx + 8].astype(np.int64) - 128
+                ref[by : by + 8, bx : bx + 8] = _dequant_idct(
+                    _fdct_quant(blk, q), q
+                )
+        assert np.array_equal(dec, ref[:h, :w])
+
+    check()
+
+
+def test_jpeg_truncation_raises_cleanly():
+    """Any prefix of a valid JPEG raises ValueError/NotImplementedError
+    (never IndexError/struct.error, never a silent wrong image)."""
+    import numpy as np
+    import pytest
+
+    from asid_v2_data_pipeline_spark.functions.codecs import (
+        parse_jpeg,
+        write_jpeg,
+    )
+
+    blob = write_jpeg(
+        np.arange(64, dtype=np.uint8).reshape(8, 8), quality=75
+    )
+    for cut in list(range(2, min(len(blob), 120))) + [len(blob) - 3]:
+        try:
+            parse_jpeg(blob[:cut])
+        except (ValueError, NotImplementedError):
+            continue
+        raise AssertionError(f"prefix of {cut} bytes decoded silently")
+
+
+def test_mkv_roundtrip_property():
+    """Property: any frame sequence (sizes, tracks, timestamp gaps,
+    cluster granularity) round-trips through the muxer/demuxer."""
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    from asid_v2_data_pipeline_spark.functions.ebml import (
+        MkvTrack,
+        parse_mkv,
+        write_mkv,
+    )
+
+    @settings(max_examples=30, deadline=None)
+    @given(
+        n=st.integers(1, 24),
+        gap=st.integers(1, 2000),
+        every=st.integers(1, 7),
+        seed=st.integers(0, 2**31 - 1),
+    )
+    def check(n, gap, every, seed):
+        import numpy as np
+
+        rng = np.random.RandomState(seed)
+        frames = []
+        for i in range(n):
+            frames.append(
+                (
+                    1 + int(rng.randint(0, 2)),
+                    i * gap,
+                    bool(rng.randint(0, 2)),
+                    bytes(rng.randint(0, 256, size=rng.randint(0, 40)).astype("uint8")),
+                )
+            )
+        tracks = [
+            MkvTrack(1, "video", "V_VP9", width=4, height=4),
+            MkvTrack(2, "audio", "A_OPUS", sampling_hz=48000.0, channels=1),
+        ]
+        blob = write_mkv(frames, tracks, cluster_every=every)
+        got = parse_mkv(blob)
+        assert sorted(got.frames, key=lambda f: (f[1], f[0], f[3])) == sorted(
+            frames, key=lambda f: (f[1], f[0], f[3])
+        )
+
+    check()
+
+
+def test_id3_roundtrip_property():
+    """Property: any text-frame dict round-trips in every encoding the
+    parser supports (incl. non-Latin text where the encoding can carry
+    it); frame overruns raise."""
+    import pytest
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    from asid_v2_data_pipeline_spark.functions.id3 import (
+        parse_id3,
+        write_id3,
+    )
+
+    ids = st.sampled_from(["TIT2", "TPE1", "TALB", "TRCK", "TCON"])
+    texts = st.text(
+        alphabet=st.characters(min_codepoint=32, max_codepoint=0x2FF),
+        min_size=0,
+        max_size=40,
+    ).map(lambda s: s.split("\x00")[0])
+
+    @settings(max_examples=40, deadline=None)
+    @given(
+        frames=st.dictionaries(ids, texts, min_size=1, max_size=5),
+        major=st.sampled_from([3, 4]),
+        enc=st.sampled_from([1, 2, 3]),  # utf-16/utf-16be/utf-8
+    )
+    def check(frames, major, enc):
+        tags = parse_id3(write_id3(frames, major=major, encoding=enc))
+        for k, v in frames.items():
+            assert tags[k] == v
+
+    check()
+
+    blob = bytearray(write_id3({"TIT2": "x"}, major=3))
+    # inflate the first frame's size beyond the tag
+    blob[14:18] = (10**6).to_bytes(4, "big")
+    with pytest.raises(ValueError, match="overruns"):
+        parse_id3(bytes(blob))

@@ -1,14 +1,18 @@
-"""Unit tests for the tokenizer, the exact-dedup operator and the Z-order
-layout key."""
+"""Unit tests for the large-scale training-data operators (dedup,
+similarity, text, multimodal, streaming-batch windows)."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from asid_v2_data_pipeline_spark.functions.layout import zorder_key
-from asid_v2_data_pipeline_spark.functions.text import tokens
-from asid_v2_data_pipeline_spark.operators.dedup import exact_dedup
+from asid_v2_data_pipeline_spark.functions import text as tx
+from asid_v2_data_pipeline_spark.operators import dedup as dd
+from asid_v2_data_pipeline_spark.operators import similarity as sim
+from asid_v2_data_pipeline_spark.operators.multimodal import (
+    extract_features,
+    synthetic_media,
+)
 
 
 def _docs(spark):
@@ -23,22 +27,1064 @@ def _docs(spark):
 
 def test_exact_dedup_keeps_first(spark):
     d = _docs(spark)
-    surv = exact_dedup(d, ["text"], "doc_id")
+    surv = dd.exact_dedup(d, ["text"], "doc_id")
     ids = sorted(r["doc_id"] for r in surv.collect())
     assert ids == [1, 2, 3]  # 4 deduped against 1
+
+
+def test_jaccard_pairs_finds_near_dup(spark):
+    d = _docs(spark)
+    pairs = dd.jaccard_pairs(d, "doc_id", "text", n=3, threshold=0.5)
+    got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
+    assert (1, 4) in got  # exact dup -> jaccard 1.0
+    assert (1, 2) in got  # near dup (1 token differs of 9)
+    assert (1, 3) not in got
+
+
+def test_jaccard_prefix_filter_is_exact(spark):
+    """PPJoin-style prefix filtering must return byte-identical pairs."""
+    from asid_v2_data_pipeline_spark.schemas import load_table
+
+    d = load_table(spark, "/root/testdata/sf0.001", "documents")
+    naive = {
+        (r["id_a"], r["id_b"], round(r["jaccard"], 9))
+        for r in dd.jaccard_pairs(d, "doc_id", "text").collect()
+    }
+    pref = {
+        (r["id_a"], r["id_b"], round(r["jaccard"], 9))
+        for r in dd.jaccard_pairs(d, "doc_id", "text", prefix_filter=True).collect()
+    }
+    assert naive == pref and len(naive) > 0
+
+
+def test_jaccard_df_cutoff_is_exact(spark):
+    """The hot-shingle cutoff must return byte-identical pairs, including
+    when near-dup pairs overlap ONLY on hot shingles (hot-heavy path)."""
+    from asid_v2_data_pipeline_spark.schemas import load_table
+
+    d = load_table(spark, "/root/testdata/sf0.001", "documents")
+    naive = {
+        (r["id_a"], r["id_b"], round(r["jaccard"], 9))
+        for r in dd.jaccard_pairs(d, "doc_id", "text").collect()
+    }
+    for cutoff in (1, 5, 50):  # cutoff=1 makes EVERY shared shingle hot
+        cut = {
+            (r["id_a"], r["id_b"], round(r["jaccard"], 9))
+            for r in dd.jaccard_pairs(
+                d, "doc_id", "text", df_cutoff=cutoff
+            ).collect()
+        }
+        assert cut == naive, f"df_cutoff={cutoff} changed results"
+    assert len(naive) > 0
+    with pytest.raises(ValueError):
+        dd.jaccard_pairs(d, "doc_id", "text", prefix_filter=True, df_cutoff=5)
+
+
+def test_minhash_lsh_catches_exact_dup(spark):
+    d = _docs(spark)
+    pairs = dd.minhash_lsh_pairs(d, "doc_id", "text")
+    got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
+    assert (1, 4) in got  # identical docs always share every band
+    assert (1, 3) not in got
+
+
+def test_simhash_hamming(spark):
+    d = _docs(spark)
+    sh = dd.simhashes(d, "doc_id", "text")
+    vals = {r["doc_id"]: r["simhash"] for r in sh.collect()}
+    assert vals[1] == vals[4]  # identical text -> identical fingerprint
+    paired = spark.createDataFrame(
+        [(vals[1], vals[2]), (vals[1], vals[3])], "a long, b long"
+    ).select(dd.hamming(F.col("a"), F.col("b")).alias("h"))
+    h12, h13 = [r["h"] for r in paired.collect()]
+    assert h12 < h13  # near-dup closer than unrelated
+
+
+def test_simhash_pairs_banding_exact(spark):
+    """Banded pair generation equals brute-force all-pairs for hd <= 3
+    (pigeonhole: <= 3 differing bits cannot touch all 4 bands)."""
+    base = 0b1010_1100_0011_0101_1111_0000_1100_1010
+    rows = [
+        (0, base),
+        (1, base ^ 0b1),                      # hd 1 -> pair
+        (2, base ^ 0b1000_0000_0001),          # hd 2, spans two bands -> pair
+        (3, base ^ (1 << 31) ^ (1 << 15) ^ 1), # hd 3, three bands -> pair
+        (4, base ^ (1 << 24) ^ (1 << 16) ^ (1 << 8) ^ 1),  # hd 4 -> no pair
+        (5, ~base & 0xFFFFFFFF),               # hd 32 -> no pair
+    ]
+    fp = spark.createDataFrame(rows, "doc_id long, simhash long")
+    got = {
+        (r["id_a"], r["id_b"], r["hd"])
+        for r in dd.simhash_pairs(fp, "doc_id", "simhash").collect()
+    }
+    brute = set()
+    for i, (ia, ha) in enumerate(rows):
+        for ib, hb in rows[i + 1:]:
+            hd = bin(ha ^ hb).count("1")
+            if hd <= 3:
+                brute.add((ia, ib, hd))
+    assert got == brute and len(brute) >= 3
+    with pytest.raises(ValueError):
+        dd.simhash_pairs(fp, "doc_id", "simhash", bands=4, max_hd=4)
+
+
+def test_topk_cosine_exact(spark):
+    rows = [
+        (0, [1.0, 0.0, 0.0]),
+        (1, [0.9, 0.1, 0.0]),
+        (2, [0.0, 1.0, 0.0]),
+        (3, [1.0, 0.05, 0.0]),
+    ]
+    e = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    q = e.filter(F.col("vec_id") == 0)
+    out = sim.topk_cosine(e, q, k=2)
+    ranked = [(r["c_id"]) for r in out.orderBy("rank").collect()]
+    assert ranked == [3, 1]  # 3 is closer to [1,0,0] than 1
+
+
+def test_lsh_same_bucket_for_identical(spark):
+    rows = [(0, [1.0] * 8), (1, [1.0] * 8), (2, [-1.0] * 8)]
+    e = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    b = e.select(
+        "vec_id", sim.lsh_bucket(F.col("embedding"), 8, planes=4).alias("b")
+    ).collect()
+    vals = {r["vec_id"]: r["b"] for r in b}
+    assert vals[0] == vals[1]
+    assert vals[0] != vals[2]
+
+
+def test_ivf_topk(spark):
+    """IVF: nprobe=K is exact; small nprobe trades recall for candidate
+    volume but always returns k ranked rows per query."""
+    from asid_v2_data_pipeline_spark.schemas import load_table
+
+    e = load_table(spark, "/root/testdata/sf0.001", "embeddings").withColumn(
+        "embedding", F.col("embedding").cast("array<double>")
+    )
+    q = e.filter(F.col("vec_id") < 5)
+    cents = sim.train_centroids_kmeanspp_lite(e, 4)
+    exact = {
+        (r["q_id"], r["c_id"]) for r in sim.topk_cosine(e, q, k=3).collect()
+    }
+    full = {
+        (r["q_id"], r["c_id"])
+        for r in sim.topk_cosine_ivf(e, q, cents, k=3, nprobe=4).collect()
+    }
+    assert full == exact
+    probe1 = sim.topk_cosine_ivf(e, q, cents, k=3, nprobe=1).collect()
+    assert all(r["rank"] <= 3 for r in probe1)
+    recall = len({(r["q_id"], r["c_id"]) for r in probe1} & exact) / len(exact)
+    assert recall > 0.3  # approximate but useful
+
+
+def test_dsir_weights_rank_target_like_docs_higher(spark):
+    """DSIR importance weights: a corpus doc written in the target's
+    vocabulary must outweigh one written in a disjoint vocabulary.
+    (No claim about repetition: repeating target n-grams also inflates
+    the RAW counts — the corpus is its own raw distribution — so the
+    per-occurrence ratios legitimately shrink.)"""
+    from asid_v2_data_pipeline_spark.operators.selection import dsir_weights
+
+    schema = "doc_id long, text string"
+    target = spark.createDataFrame(
+        [
+            (100, "neural network training with gradient descent steps"),
+            (101, "training neural models with gradient updates"),
+        ],
+        schema,
+    )
+    corpus = spark.createDataFrame(
+        [
+            (1, "neural network training with gradient descent"),
+            (2, "cooking pasta requires salted boiling water tonight"),
+        ],
+        schema,
+    )
+    res = {r["doc_id"]: r for r in dsir_weights(corpus, target, buckets=64).collect()}
+    assert res[1]["weight"] > res[2]["weight"]  # target vocab beats off-target
+    assert res[1]["n_feats"] == 6 + 5  # unigrams + bigrams
+    assert res[2]["n_feats"] == 7 + 6
+
+
+def test_ivf_adc_recall_vs_float_path(spark):
+    """IVF + int8 ADC (score codes in the probed cells, float-rescore the
+    top rerank_factor*k): recall >= 0.95 vs the float IVF path at the same
+    nprobe on the planted-neighbor harness, and with full probes the
+    re-rank absorbs all int8 rounding — identical rows to exact top-k."""
+    import numpy as np
+
+    rng = np.random.RandomState(13)
+    dim, n_q, n_nb = 16, 10, 5
+    rows, vid = [], 1000
+    for qi in range(n_q):
+        qv = rng.randn(dim)
+        qv /= np.linalg.norm(qv)
+        rows.append((qi, [float(x) for x in qv]))
+        for _ in range(n_nb):  # planted near-dups at cosine ~0.99
+            nb = qv + 0.05 * rng.randn(dim)
+            nb /= np.linalg.norm(nb)
+            rows.append((vid, [float(x) for x in nb]))
+            vid += 1
+    for _ in range(200):
+        v = rng.randn(dim)
+        rows.append((vid, [float(x) for x in v / np.linalg.norm(v)]))
+        vid += 1
+    e = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    q = e.filter(F.col("vec_id") < n_q)
+    cents = sim.train_centroids_kmeans(e, 4, iters=3)
+
+    flt = {
+        (r["q_id"], r["c_id"])
+        for r in sim.topk_cosine_ivf(e, q, cents, k=5, nprobe=2).collect()
+    }
+    adc = {
+        (r["q_id"], r["c_id"])
+        for r in sim.topk_cosine_ivf_adc(e, q, cents, k=5, nprobe=2).collect()
+    }
+    recall = len(adc & flt) / len(flt)
+    assert recall >= 0.95, f"ADC recall vs float IVF = {recall}"
+
+    exact = {
+        (r["q_id"], r["c_id"]) for r in sim.topk_cosine(e, q, k=5).collect()
+    }
+    adc_full = {
+        (r["q_id"], r["c_id"])
+        for r in sim.topk_cosine_ivf_adc(
+            e, q, cents, k=5, nprobe=len(cents), rerank_factor=8
+        ).collect()
+    }
+    assert adc_full == exact
+
+
+def test_lsh_multiprobe_recall_floor(spark):
+    """Multi-probe LSH on a corpus with PLANTED near neighbors (an ANN
+    structure is meaningless on pure noise): recall@5 >= 0.9 at nprobe=4
+    with 8 planes, monotone in nprobe, and nprobe=1 == single-probe."""
+    import numpy as np
+
+    rng = np.random.RandomState(7)
+    dim, n_q, n_nb = 16, 10, 5
+    rows = []
+    vid = 1000
+    for qi in range(n_q):
+        qv = rng.randn(dim)
+        qv /= np.linalg.norm(qv)
+        rows.append((qi, [float(x) for x in qv]))
+        for _ in range(n_nb):  # planted near-dups at cosine ~0.99
+            nb = qv + 0.05 * rng.randn(dim)
+            nb /= np.linalg.norm(nb)
+            rows.append((vid, [float(x) for x in nb]))
+            vid += 1
+    for _ in range(200):  # background noise
+        v = rng.randn(dim)
+        rows.append((vid, [float(x) for x in v / np.linalg.norm(v)]))
+        vid += 1
+    e = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    q = e.filter(F.col("vec_id") < n_q)
+    exact = {
+        (r["q_id"], r["c_id"]) for r in sim.topk_cosine(e, q, k=5).collect()
+    }
+
+    def got(nprobe):
+        return {
+            (r["q_id"], r["c_id"])
+            for r in sim.topk_cosine_lsh(
+                e, q, dim=dim, k=5, planes=8, nprobe=nprobe
+            ).collect()
+        }
+
+    assert got(1) == {
+        (r["q_id"], r["c_id"])
+        for r in sim.topk_cosine_lsh(e, q, dim=dim, k=5, planes=8).collect()
+    }  # nprobe=1 == legacy single-probe
+    r1 = len(got(1) & exact) / len(exact)
+    r4 = len(got(4) & exact) / len(exact)
+    assert r4 >= r1  # probing only adds candidates
+    assert r4 >= 0.9, f"recall@5 at nprobe=4 = {r4} (nprobe=1: {r1})"
+
+
+def test_lsh_and_or_amplification_beats_multiprobe(spark):
+    """AND-OR amplified LSH (independent hyperplane tables, OR across
+    them) reaches recall >= 0.95 at the SAME candidate budget where
+    single-table multi-probe pins 0.90 (VERDICT r2 task 5): planted
+    neighbors, 9 planes x 3 tables vs 8 planes x nprobe=2."""
+    import numpy as np
+
+    rng = np.random.RandomState(7)
+    dim, n_q, n_nb = 16, 10, 5
+    rows = []
+    vid = 1000
+    for qi in range(n_q):
+        qv = rng.randn(dim)
+        qv /= np.linalg.norm(qv)
+        rows.append((qi, [float(x) for x in qv]))
+        for _ in range(n_nb):
+            nb = qv + 0.05 * rng.randn(dim)
+            nb /= np.linalg.norm(nb)
+            rows.append((vid, [float(x) for x in nb]))
+            vid += 1
+    for _ in range(200):
+        v = rng.randn(dim)
+        rows.append((vid, [float(x) for x in v / np.linalg.norm(v)]))
+        vid += 1
+    e = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    q = e.filter(F.col("vec_id") < n_q)
+    exact = {
+        (r["q_id"], r["c_id"]) for r in sim.topk_cosine(e, q, k=5).collect()
+    }
+
+    # baseline: single-table multi-probe at its pinned 0.90 floor
+    st = {
+        (r["q_id"], r["c_id"])
+        for r in sim.topk_cosine_lsh(
+            e, q, dim=dim, k=5, planes=8, nprobe=2
+        ).collect()
+    }
+    st_cands = sim.lsh_table_candidates(
+        e, q, dim, planes=8, tables=1, nprobe=2
+    ).count()
+    st_recall = len(st & exact) / len(exact)
+    assert st_recall >= 0.9
+
+    # AND-OR: 3 independent 9-plane tables — tighter buckets, OR'd
+    mt = {
+        (r["q_id"], r["c_id"])
+        for r in sim.topk_cosine_lsh_tables(
+            e, q, dim=dim, k=5, planes=9, tables=3
+        ).collect()
+    }
+    mt_cands = sim.lsh_table_candidates(
+        e, q, dim, planes=9, tables=3
+    ).count()
+    mt_recall = len(mt & exact) / len(exact)
+    assert mt_cands <= st_cands * 1.1, (mt_cands, st_cands)  # same budget
+    assert mt_recall >= 0.95, f"AND-OR recall {mt_recall} (cands {mt_cands} vs {st_cands})"
 
 
 def test_tokens_and_counts(spark):
     df = spark.createDataFrame([("Hello, World! it's 42",)], "text string")
     out = df.select(
-        tokens(F.col("text")).alias("t"),
-        F.size(tokens(F.col("text"))).alias("n"),
+        tx.tokens(F.col("text")).alias("t"),
+        tx.token_count(F.col("text")).alias("n"),
     ).collect()[0]
     assert out["t"] == ["hello", "world", "it's", "42"]
     assert out["n"] == 4
 
 
+def test_detect_language(spark):
+    rows = [
+        ("the cat and the dog sat in the house for a while",),
+        ("der Hund und die Katze sind nicht auf der Strasse",),
+        ("xyzzy plugh qwerty",),
+    ]
+    df = spark.createDataFrame(rows, "text string")
+    got = [
+        r["d"]
+        for r in df.select(tx.detect_language(F.col("text")).alias("d")).collect()
+    ]
+    assert got[0] == "en" and got[1] == "de" and got[2] is None
+
+
+def test_fingerprint_deterministic(spark):
+    df = spark.createDataFrame([("alpha beta gamma",), ("alpha beta gamma",), ("alpha beta delta",)], "text string")
+    fps = [r["f"] for r in df.select(tx.fingerprint(F.col("text")).alias("f")).collect()]
+    assert fps[0] == fps[1] != fps[2]
+
+
+def test_multimodal_features(spark):
+    media = synthetic_media(spark, n=12)
+    feats = extract_features(media)
+    rows = feats.collect()
+    assert len(rows) == 12
+    for r in rows:
+        assert len(r["feature"]) == 8
+        assert abs(sum(r["feature"]) - 1.0) < 1e-9  # normalized histogram
+        assert r["n_bytes"] >= 32
+
+
+def test_quota_per_group(spark):
+    from asid_v2_data_pipeline_spark.operators.sampling import quota_per_group
+
+    rows = [(i, f"g{i % 3}") for i in range(100)]
+    df = spark.createDataFrame(rows, "id bigint, grp string")
+    kept = quota_per_group(df, ["grp"], 5, "id", seed=17)
+    out = kept.groupBy("grp").count().collect()
+    assert {r["grp"]: r["count"] for r in out} == {"g0": 5, "g1": 5, "g2": 5}
+    # deterministic: same selection on rerun
+    again = quota_per_group(df, ["grp"], 5, "id", seed=17)
+    assert sorted(r["id"] for r in kept.collect()) == sorted(
+        r["id"] for r in again.collect()
+    )
+    # groups smaller than the quota survive whole
+    small = spark.createDataFrame([(1, "x"), (2, "x")], "id bigint, grp string")
+    assert quota_per_group(small, ["grp"], 5, "id").count() == 2
+
+
+def test_stratified_sample(spark):
+    from asid_v2_data_pipeline_spark.operators.sampling import (
+        stratified_sample,
+    )
+
+    rows = [(i, ["a", "b", "c"][i % 3]) for i in range(300)]
+    df = spark.createDataFrame(rows, "id bigint, s string")
+    out = stratified_sample(df, "s", {"a": 1.0, "b": 0.5}, "id", seed=23)
+    got = {r["s"]: 0 for r in out.collect()}
+    counts = out.groupBy("s").count().collect()
+    by = {r["s"]: r["count"] for r in counts}
+    assert by["a"] == 100  # fraction 1.0 keeps everything
+    assert 20 <= by.get("b", 0) <= 80  # ~50 expected, hash-uniform
+    assert "c" not in by and "c" not in got  # absent stratum -> 0
+
+
+def test_connected_components(spark):
+    """Chain + triangle + isolated pair: labels converge to the component
+    minimum; pointer jumping beats the chain diameter."""
+    from asid_v2_data_pipeline_spark.operators.dedup import connected_components
+
+    # chain 1-2-3-...-9 (diameter 8), triangle {20,21,22}, pair {30,31}
+    edges = (
+        [(i, i + 1) for i in range(1, 9)]
+        + [(20, 21), (21, 22), (20, 22)]
+        + [(30, 31)]
+    )
+    pairs = spark.createDataFrame(edges, "id_a bigint, id_b bigint")
+    got = {
+        r["node"]: r["label"] for r in connected_components(pairs).collect()
+    }
+    expect = {i: 1 for i in range(1, 10)}
+    expect.update({20: 20, 21: 20, 22: 20, 30: 30, 31: 30})
+    assert got == expect
+
+
+def test_pack_greedy_pinned(spark):
+    """First-fit-contiguous packing, hand-computed: resets when the next
+    doc would overflow, oversized docs get their own bin, zero-token
+    docs never force a reset."""
+    from asid_v2_data_pipeline_spark.operators.packing import pack_greedy
+
+    rows = [
+        ("a", 1, 50), ("a", 2, 60),   # bin 0 (110)
+        ("a", 3, 30),                  # bin 1 (would make 140 > 128)
+        ("a", 4, 200),                 # bin 2 (oversized, alone)
+        ("a", 5, 10),                  # bin 3 (200+10 > 128)
+        ("b", 10, 0), ("b", 11, 0),   # bin 0 — zero fill, no resets
+        ("b", 12, 130),                # still bin 0 (fill==0 -> no reset)
+    ]
+    df = spark.createDataFrame(rows, "source string, doc_id long, ntok long")
+    got = {
+        (r["source"], r["doc_id"]): r["bin_id"]
+        for r in pack_greedy(df, "source", "doc_id", "ntok", 128).collect()
+    }
+    assert got == {
+        ("a", 1): 0, ("a", 2): 0, ("a", 3): 1, ("a", 4): 2, ("a", 5): 3,
+        ("b", 10): 0, ("b", 11): 0, ("b", 12): 0,
+    }
+
+
+def test_connected_components_raises_when_unconverged(spark):
+    """ADVICE r2: exhausting max_rounds mid-propagation must raise, not
+    silently return wrong cluster ids."""
+    import pytest
+
+    from asid_v2_data_pipeline_spark.operators.dedup import connected_components
+
+    # a 6-node chain cannot settle AND verify fixpoint in one round
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 6)], "id_a long, id_b long"
+    )
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(pairs, max_rounds=1)
+
+
+def test_asof_rejects_reserved_column_names(spark):
+    """ADVICE r2: inputs carrying the operator's internal names (_ts,
+    _rp, ...) or an asof_* output name fail fast with a clear error."""
+    import pytest
+
+    from asid_v2_data_pipeline_spark.operators.asof import asof_join_backward
+
+    r = spark.createDataFrame(
+        [(1, 10, 5)], "user_id long, ts long, event_id long"
+    )
+    bad_left = spark.createDataFrame(
+        [(1, 10, 0.5)], "user_id long, ts long, _rp double"
+    )
+    with pytest.raises(ValueError, match="_rp"):
+        asof_join_backward(
+            bad_left, r, ["user_id"], "ts", ["event_id"], "event_id"
+        )
+    bad_left2 = spark.createDataFrame(
+        [(1, 10, 0.5)], "user_id long, ts long, asof_x double"
+    )
+    with pytest.raises(ValueError, match="asof_x"):
+        asof_join_backward(
+            bad_left2, r, ["user_id"], "ts", ["event_id"], "event_id"
+        )
+
+
+def test_connected_components_empty(spark):
+    from asid_v2_data_pipeline_spark.operators.dedup import connected_components
+
+    pairs = spark.createDataFrame([], "id_a bigint, id_b bigint")
+    assert connected_components(pairs).count() == 0
+
+
+def test_mm_oracle_octet_level_non_ascii(spark):
+    """ADVICE r1: the MM oracle must count UTF-8 *bytes*, not characters —
+    verified on multi-byte text (accents, CJK, emoji) where the old
+    character-level oracle would diverge."""
+    import duckdb
+
+    from asid_v2_data_pipeline_spark.queries.media import MM_SQL
+
+    docs = [(1, "héllo wörld"), (2, "日本語テキスト"), (3, "plain ascii"), (4, "mix: café 🌍")]
+    d = spark.createDataFrame(docs, "doc_id bigint, text string")
+    media = d.select(
+        F.col("doc_id").alias("media_id"),
+        F.lit("image").alias("kind"),
+        F.lit("application/octet-stream").alias("mime"),
+        F.encode("text", "utf-8").alias("payload"),
+        F.lit(None).cast("int").alias("width"),
+        F.lit(None).cast("int").alias("height"),
+        F.lit(None).cast("int").alias("duration_ms"),
+    )
+    feats = extract_features(media)
+    sel = [
+        F.round(F.element_at("feature", k + 1).cast("double"), 6).alias(f"f{k}")
+        for k in range(8)
+    ]
+    got = {
+        r["doc_id"]: (r["n_bytes"], tuple(r[f"f{k}"] for k in range(8)))
+        for r in feats.select(
+            F.col("media_id").alias("doc_id"), "n_bytes", *sel
+        ).collect()
+    }
+
+    con = duckdb.connect()
+    vals = ", ".join(f"({i}, '{t}')" for i, t in docs)
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM (VALUES {vals}) t(doc_id, text)")
+    for row in con.execute(MM_SQL).fetchall():
+        doc_id, n_bytes, fs = row[0], row[1], tuple(row[2:])
+        assert got[doc_id][0] == n_bytes, f"doc {doc_id}: byte count"
+        # non-ASCII docs must have n_bytes > character count
+        text = dict(docs)[doc_id]
+        assert n_bytes == len(text.encode("utf-8"))
+        for a, b in zip(got[doc_id][1], fs):
+            assert a == pytest.approx(b, abs=1e-6), f"doc {doc_id}"
+
+
+def test_quality_score_bounds(spark):
+    rows = [("a good long sentence with many plain words here",), ("!!! ??? ...",), ("",)]
+    df = spark.createDataFrame(rows, "text string")
+    got = [r["q"] for r in df.select(tx.quality_score(F.col("text")).alias("q")).collect()]
+    assert all(0.0 <= q <= 1.0 for q in got)
+    assert got[0] > got[1]
+
+
+def test_weighted_repeat(spark):
+    from asid_v2_data_pipeline_spark.operators.sampling import weighted_repeat
+
+    rows = [(i, ["a", "b", "c"][i % 3]) for i in range(300)]
+    df = spark.createDataFrame(rows, "id bigint, g string")
+    out = weighted_repeat(df, "g", {"a": 2.0, "b": 0.5, "c": 1.25}, "id", seed=29)
+    by = {r["g"]: r["count"] for r in out.groupBy("g").count().collect()}
+    assert by["a"] == 200  # integer weight: exactly 2 epochs each
+    assert 20 <= by["b"] <= 80  # ~50 expected
+    assert 100 <= by["c"] <= 150  # 100 guaranteed + ~25 extra
+    # every kept row's epochs are dense 0..n-1
+    eps = (
+        out.filter(F.col("g") == "a")
+        .groupBy("id")
+        .agg(F.sort_array(F.collect_list("epoch")).alias("e"))
+        .collect()
+    )
+    assert all(r["e"] == [0, 1] for r in eps)
+    # absent group -> dropped entirely
+    assert weighted_repeat(df, "g", {"a": 1.0}, "id").filter(
+        F.col("g") != "a"
+    ).count() == 0
+    # deterministic across reruns
+    a1 = sorted((r["id"], r["epoch"]) for r in out.collect())
+    a2 = sorted(
+        (r["id"], r["epoch"])
+        for r in weighted_repeat(
+            df, "g", {"a": 2.0, "b": 0.5, "c": 1.25}, "id", seed=29
+        ).collect()
+    )
+    assert a1 == a2
+
+
+def test_contamination_and_decontaminate(spark):
+    from asid_v2_data_pipeline_spark.operators.decontam import (
+        contamination,
+        decontaminate,
+    )
+
+    bench = spark.createDataFrame(
+        [(100, "the quick brown fox jumps over the lazy dog")],
+        "doc_id bigint, text string",
+    )
+    docs = spark.createDataFrame(
+        [
+            (1, "the quick brown fox jumps over the lazy dog again today"),
+            (2, "completely unrelated text about ice charts and radar"),
+            (3, "quick brown fox jumps over the lazy dog"),  # 8-token sub-run
+        ],
+        "doc_id bigint, text string",
+    )
+    hits = contamination(docs, bench, "doc_id", "text", n=8)
+    got = {r["doc_id"]: r["n_hits"] for r in hits.collect()}
+    # doc 1 contains both 8-gram windows of the 9-token benchmark text,
+    # doc 3 contains one of them, doc 2 none
+    assert got == {1: 2, 3: 1}
+    clean = decontaminate(docs, bench, "doc_id", "text", n=8)
+    assert sorted(r["doc_id"] for r in clean.collect()) == [2]
+    # short documents (< n tokens) match only via whole-document fold
+    short_b = spark.createDataFrame([(9, "polar bear")], "doc_id bigint, text string")
+    short_d = spark.createDataFrame(
+        [(4, "polar bear"), (5, "polar bears")], "doc_id bigint, text string"
+    )
+    got2 = {r["doc_id"]: r["n_hits"] for r in contamination(short_d, short_b, "doc_id", "text", n=8).collect()}
+    assert got2 == {4: 1}
+
+
+def test_group_quantiles_exact(spark):
+    from asid_v2_data_pipeline_spark.operators.stats import (
+        group_quantiles_exact,
+    )
+
+    rows = [(i, "g", v) for i, v in enumerate([10, 20, 30, 40])] + [
+        (100 + i, "h", i + 1) for i in range(100)
+    ]
+    df = spark.createDataFrame(rows, "id bigint, g string, v int")
+    out = {
+        r["g"]: r
+        for r in group_quantiles_exact(
+            df, "g", "v", [(1, 2), (9, 10), (99, 100)], "id"
+        ).collect()
+    }
+    # n=4: p50 -> rank ceil(2)=2 -> 20; p90 -> ceil(3.6)=4 -> 40; p99 -> 4
+    assert (out["g"]["p1_2"], out["g"]["p9_10"], out["g"]["p99_100"]) == (20, 40, 40)
+    # n=100 over 1..100: ranks 50, 90, 99
+    assert (out["h"]["p1_2"], out["h"]["p9_10"], out["h"]["p99_100"]) == (50, 90, 99)
+
+
+def test_top_k_by_count(spark):
+    from asid_v2_data_pipeline_spark.operators.stats import top_k_by_count
+
+    rows = [(w,) for w in ["b"] * 3 + ["a"] * 3 + ["c"] * 2 + ["d"]]
+    df = spark.createDataFrame(rows, "w string")
+    got = [(r["w"], r["n"]) for r in top_k_by_count(df, ["w"], 3).collect()]
+    # ties broken by key ascending: a before b at count 3
+    assert got == [("a", 3), ("b", 3), ("c", 2)]
+
+
+def test_incremental_index_dedup(spark):
+    """A planted near-dup crossing the batch/index boundary is found;
+    unrelated docs are not."""
+    from asid_v2_data_pipeline_spark.operators.dedup import (
+        index_candidates,
+        minhash_band_rows,
+    )
+
+    base = "the quick brown fox jumps over the lazy dog and runs far away home"
+    hist = spark.createDataFrame(
+        [(1, base), (2, "completely different text about ice charts and radar")],
+        "doc_id bigint, text string",
+    )
+    batch = spark.createDataFrame(
+        [(10, base + " tonight"), (11, "fresh unseen content with novel words")],
+        "doc_id bigint, text string",
+    )
+    cands = index_candidates(
+        minhash_band_rows(batch, "doc_id", "text"),
+        minhash_band_rows(hist, "doc_id", "text"),
+    )
+    got = {(r["id_new"], r["id_index"]) for r in cands.collect()}
+    assert (10, 1) in got
+    assert all(n != 11 for n, _ in got)
+
+
+def test_normalize_and_redact(spark):
+    from asid_v2_data_pipeline_spark.functions.text import (
+        normalize_text,
+        redact,
+    )
+
+    df = spark.createDataFrame(
+        [("  The\tQuick\n\nBROWN  fox ", "acct 12345, call 555-0199")],
+        "a string, b string",
+    )
+    r = df.select(
+        normalize_text(F.col("a")).alias("n"), redact(F.col("b")).alias("r")
+    ).collect()[0]
+    assert r["n"] == "the quick brown fox"
+    assert r["r"] == "acct #, call #-#"
+
+
+def test_kmeans_quantizer(spark):
+    """Lloyd iterations on three planted orthogonal clusters: trained
+    centroids separate them into distinct cells and cut inertia vs the
+    lowest-id init."""
+    import random
+
+    from asid_v2_data_pipeline_spark.operators.similarity import (
+        cosine,
+        ivf_assign,
+        train_centroids_kmeans,
+        train_centroids_kmeanspp_lite,
+    )
+
+    rng = random.Random(7)
+    rows = []
+    for i in range(90):
+        axis = i % 3
+        v = [rng.uniform(0.0, 0.15) for _ in range(6)]
+        v[axis * 2] += 1.0
+        rows.append((i, v))
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+
+    def inertia(cents):
+        a = ivf_assign(df, cents)
+        cmap = {cid: cvec for cid, cvec in cents}
+        best = None
+        for cid, cvec in cents:
+            s = cosine(F.col("embedding"), F.array(*[F.lit(x) for x in cvec]))
+            best = s if best is None else F.greatest(best, s)
+        return a.select(F.avg(1 - best).alias("i")).collect()[0]["i"]
+
+    lite = train_centroids_kmeanspp_lite(df, 3)
+    trained = train_centroids_kmeans(df, 3, iters=5)
+    assert inertia(trained) <= inertia(lite) + 1e-12
+    # trained cells == planted clusters (axis identity per cell)
+    got = ivf_assign(df, trained).select("vec_id", "cell").collect()
+    cell_of_axis = {}
+    for r in got:
+        axis = r["vec_id"] % 3
+        cell_of_axis.setdefault(axis, set()).add(r["cell"])
+    assert all(len(cells) == 1 for cells in cell_of_axis.values())
+    assert len(set.union(*cell_of_axis.values())) == 3
+
+
+def test_curation_edge_cases(spark):
+    """Empty corpus and all-duplicate corpus degrade gracefully."""
+    from asid_v2_data_pipeline_spark.plans.curation import curate
+
+    schema = "doc_id bigint, lang string, source string, text string"
+    empty = spark.createDataFrame([], schema)
+    bench = spark.createDataFrame(
+        [(1000, "en", "eval", "held out evaluation prompt with many tokens here")],
+        schema,
+    )
+    assert curate(empty, bench, {"en": 1.0}).count() == 0
+    # five byte-identical docs -> exactly one survivor (weight 1.0)
+    txt = "the same document body repeated verbatim across many rows here"
+    dupes = spark.createDataFrame(
+        [(i, "en", f"s{i}", txt) for i in range(5)], schema
+    )
+    out = curate(dupes, bench, {"en": 1.0}).collect()
+    assert [r["doc_id"] for r in out] == [0]
+
+
+def test_quantiles_single_row_groups(spark):
+    from asid_v2_data_pipeline_spark.operators.stats import (
+        group_quantiles_exact,
+    )
+
+    df = spark.createDataFrame([(1, "g", 42)], "id bigint, g string, v int")
+    r = group_quantiles_exact(df, "g", "v", [(1, 2), (99, 100)], "id").collect()[0]
+    assert (r["p1_2"], r["p99_100"]) == (42, 42)
+
+
+def test_asof_join_backward(spark):
+    import datetime as dt
+
+    from asid_v2_data_pipeline_spark.operators.asof import asof_join_backward
+
+    T = lambda s: dt.datetime(2024, 1, 1, 0, 0, s)
+    right = spark.createDataFrame(
+        [(1, T(10), 100), (1, T(20), 101), (1, T(20), 102), (2, T(5), 200)],
+        "user_id long, ts timestamp, event_id long",
+    )
+    left = spark.createDataFrame(
+        [
+            (1, T(15), 900),  # between -> matches ts=10
+            (1, T(20), 901),  # equal -> inclusive, tie -> greatest event_id
+            (1, T(5), 902),   # before all -> NULL
+            (3, T(30), 903),  # key with no right rows -> NULL
+        ],
+        "user_id long, ts timestamp, event_id long",
+    )
+    out = {
+        r["event_id"]: r["asof_event_id"]
+        for r in asof_join_backward(
+            left, right, ["user_id"], "ts", ["event_id"], "event_id"
+        ).collect()
+    }
+    assert out == {900: 100, 901: 102, 902: None, 903: None}
+
+
+def test_pool_raw_frames(spark):
+    from asid_v2_data_pipeline_spark.operators.multimodal import (
+        pool_raw_frames,
+    )
+
+    # 4x4 frame of 0..15 -> 2x2 block means [[2.5,4.5],[10.5,12.5]]
+    frame = bytes(range(16))
+    short = bytes([8])  # zero-padded: only byte 0 set
+    media = spark.createDataFrame(
+        [(1, frame), (2, short), (3, None)], "media_id long, payload binary"
+    )
+    got = {
+        r["media_id"]: r["pooled"]
+        for r in pool_raw_frames(media, 4, 4, 2).collect()
+    }
+    assert got[1] == [2.5, 4.5, 10.5, 12.5]
+    assert got[2] == [2.0, 0.0, 0.0, 0.0]  # 8/4 in the first block
+    assert got[3] is None
+
+
+def test_sample_frames(spark):
+    from asid_v2_data_pipeline_spark.operators.multimodal import sample_frames
+
+    # 10 bytes, frame=4 -> 2 complete frames (last 2 bytes dropped);
+    # stride 2 -> frames 0 only... use 20 bytes -> 5 frames -> 0,2,4
+    payload = bytes(range(20))
+    media = spark.createDataFrame(
+        [(1, payload), (2, bytes(3)), (3, None)],
+        "media_id long, payload binary",
+    )
+    got = sorted(
+        (r["media_id"], r["frame_no"], r["f_sum"])
+        for r in sample_frames(media, 4, 2, 8).collect()
+    )
+    # frame sums: f0=0+1+2+3=6, f2=8+9+10+11=38, f4=16+17+18+19=70
+    assert got == [(1, 0, 6), (1, 2, 38), (1, 4, 70)]
+
+
+def test_quota_scalable_matches_plain(spark):
+    """The two-phase hot-group quota returns EXACTLY the plain window's
+    selection — including when the pre-filter under-admits and the
+    fallback path fires (forced with a tiny safety factor)."""
+    from asid_v2_data_pipeline_spark.operators.sampling import (
+        quota_per_group,
+        quota_per_group_scalable,
+    )
+
+    rows = [(i, "big") for i in range(1000)] + [
+        (10_000 + i, "small") for i in range(4)
+    ] + [(20_000 + i, "mid") for i in range(40)]
+    df = spark.createDataFrame(rows, "id bigint, grp string")
+
+    def ids(out):
+        return sorted((r["grp"], r["id"]) for r in out.collect())
+
+    want = ids(quota_per_group(df, ["grp"], 10, "id", seed=17))
+    got = ids(quota_per_group_scalable(df, ["grp"], 10, "id", seed=17))
+    assert got == want
+    # forced fallback: safety so small the pre-filter admits nobody
+    forced = ids(
+        quota_per_group_scalable(df, ["grp"], 10, "id", seed=17, safety=1e-9)
+    )
+    assert forced == want
+
+
+def test_asof_join_forward(spark):
+    import datetime as dt
+
+    from asid_v2_data_pipeline_spark.operators.asof import asof_join_forward
+
+    T = lambda s: dt.datetime(2024, 1, 1, 0, 0, s)
+    right = spark.createDataFrame(
+        [(1, T(10), 100), (1, T(10), 99), (1, T(30), 101)],
+        "user_id long, ts timestamp, event_id long",
+    )
+    left = spark.createDataFrame(
+        [(1, T(5), 900), (1, T(10), 901), (1, T(31), 902)],
+        "user_id long, ts timestamp, event_id long",
+    )
+    out = {
+        r["event_id"]: r["asof_event_id"]
+        for r in asof_join_forward(
+            left, right, ["user_id"], "ts", ["event_id"], "event_id"
+        ).collect()
+    }
+    # T(5) -> first future is T(10), tie -> SMALLEST event_id (99)
+    # T(10) -> inclusive match at same ts; T(31) -> nothing ahead
+    assert out == {900: 99, 901: 99, 902: None}
+
+
+def test_duplicate_spans_pinned(spark):
+    from asid_v2_data_pipeline_spark.operators.dedup import duplicate_spans
+
+    # k=2 windows; shared bigrams between docs 1/2: "a b", "b c" (chain ->
+    # one span 1..3 in doc 1), "x y" (isolated span).  Doc 3 shares
+    # nothing -> absent.  Doc 4 shorter than k -> no windows at all.
+    docs = spark.createDataFrame(
+        [
+            (1, "a b c q q q x y"),
+            (2, "p a b c p p x y"),
+            (3, "m n o"),
+            (4, "z"),
+        ],
+        "doc_id long, text string",
+    )
+    got = {
+        (r.doc_id, r.span_start, r.span_len)
+        for r in duplicate_spans(docs, k=2).collect()
+    }
+    # doc 1: dup starts {1,2} chain (gap 1 <= k) -> span [1, len 3];
+    #        start 7 ("x y") -> span [7, len 2]
+    # doc 2: dup starts {2,3} -> [2,3+1=len 3]; start 7 -> [7, len 2]
+    assert got == {
+        (1, 1, 3),
+        (1, 7, 2),
+        (2, 2, 3),
+        (2, 7, 2),
+    }
+
+
+def test_duplicate_spans_gap_split(spark):
+    from asid_v2_data_pipeline_spark.operators.dedup import duplicate_spans
+
+    # dup windows at starts 1 and 5 with k=3: gap 4 > k=3 -> two islands
+    # (token 4 is covered by NO duplicated window: 1..3 and 5..7)
+    docs = spark.createDataFrame(
+        [(1, "a b c q d e f"), (2, "a b c z z d e f")],
+        "doc_id long, text string",
+    )
+    got = sorted(
+        (r.doc_id, r.span_start, r.span_len)
+        for r in duplicate_spans(docs, k=3).collect()
+    )
+    assert got == [(1, 1, 3), (1, 5, 3), (2, 1, 3), (2, 6, 3)]
+
+
+def test_interval_point_join_pinned(spark):
+    from asid_v2_data_pipeline_spark.operators.rangejoin import (
+        interval_point_join,
+    )
+
+    iv = spark.createDataFrame(
+        [(1, 10, 30), (1, 25, 26), (2, 0, 1000)],
+        "k long, s long, e long",
+    )
+    pt = spark.createDataFrame(
+        # 10/30 inclusive ends; 26 inside both intervals of k=1;
+        # bucket_width=7 forces every interval to span several buckets
+        [(1, 10, 100), (1, 26, 101), (1, 31, 102), (2, 999, 103), (3, 5, 104)],
+        "k long, t long, pid long",
+    )
+    got = sorted(
+        (r.k, r.s, r.t, r.pid)
+        for r in interval_point_join(
+            iv, pt, ["k"], "s", "e", "t", bucket_width=7
+        ).collect()
+    )
+    # each match exactly once even though intervals replicate over buckets
+    assert got == [(1, 10, 10, 100), (1, 10, 26, 101), (1, 25, 26, 101),
+                   (2, 0, 999, 103)]
+
+
+def test_interval_point_join_left(spark):
+    from asid_v2_data_pipeline_spark.operators.rangejoin import (
+        interval_point_join,
+    )
+
+    iv = spark.createDataFrame([(1, 10, 20), (1, 50, 60)], "k long, s long, e long")
+    pt = spark.createDataFrame([(1, 15, 100)], "k long, t long, pid long")
+    rows = interval_point_join(
+        iv, pt, ["k"], "s", "e", "t", bucket_width=8, how="left"
+    ).collect()
+    by_start = {r.s: (r.t, r.pid) for r in rows}
+    assert len(rows) == 2
+    assert by_start[10] == (15, 100)
+    assert by_start[50] == (None, None)  # unmatched interval kept once
+
+
+def test_interval_overlap_join_exactly_once(spark):
+    from asid_v2_data_pipeline_spark.operators.rangejoin import (
+        interval_overlap_join,
+    )
+
+    left = spark.createDataFrame(
+        [(1, 0, 100, 7), (1, 200, 210, 8)], "k long, ls long, le long, lid long"
+    )
+    right = spark.createDataFrame(
+        # overlaps lid=7 across MANY shared buckets (width 10) -> must
+        # still emit once; (205,300) overlaps lid=8; (150,160) overlaps none
+        [(1, 50, 90, 70), (1, 205, 300, 71), (1, 150, 160, 72)],
+        "k long, rs long, re long, rid long",
+    )
+    got = sorted(
+        (r.lid, r.rid)
+        for r in interval_overlap_join(
+            left, right, ["k"], "ls", "le", "rs", "re", bucket_width=10
+        ).collect()
+    )
+    assert got == [(7, 70), (8, 71)]
+
+
+def test_temperature_sample_flattens_skew(spark):
+    from asid_v2_data_pipeline_spark.operators.sampling import (
+        temperature_sample,
+    )
+
+    # 180 'big' rows vs 20 'small' rows; α=0.5 allocation: target
+    # N=100 split ∝ √180 : √20 = 3:1 -> big ~75/180 (≈0.42 rate),
+    # small ~25/20 (rate caps at 1.0: every small row kept)
+    rows = [(i, "big") for i in range(180)] + [
+        (1000 + i, "small") for i in range(20)
+    ]
+    df = spark.createDataFrame(rows, "id long, grp string")
+    kept = temperature_sample(df, "grp", "id", target_fraction_denom=2)
+    by = {
+        r.grp: r.n
+        for r in kept.groupBy("grp").agg(F.count(F.lit(1)).alias("n")).collect()
+    }
+    assert by["small"] == 20  # capped threshold admits the whole domain
+    frac_big = by["big"] / 180
+    assert frac_big < 0.55  # big domain genuinely downsampled
+    # deterministic: identical admission set on re-run
+    ids1 = sorted(r.id for r in kept.collect())
+    ids2 = sorted(
+        r.id
+        for r in temperature_sample(
+            df, "grp", "id", target_fraction_denom=2
+        ).collect()
+    )
+    assert ids1 == ids2
+
+
+def test_quantile_gate_tie_stable(spark):
+    from asid_v2_data_pipeline_spark.operators.stats import quantile_gate
+
+    # group g: values [1,2,2,2,9] — p25 nearest-rank (rank ceil(5/4)=2)
+    # is 2; gate >= 2 keeps ALL the tied 2s (admitted set independent of
+    # tie order) and drops only the 1
+    df = spark.createDataFrame(
+        [(1, "g", 1.0), (2, "g", 2.0), (3, "g", 2.0), (4, "g", 2.0),
+         (5, "g", 9.0), (6, "h", 5.0)],
+        "id long, grp string, v double",
+    )
+    kept = sorted(
+        r.id
+        for r in quantile_gate(df, "grp", "v", (1, 4), "id").collect()
+    )
+    assert kept == [2, 3, 4, 5, 6]
+    # approx mode admits a superset-ish set at same quantile on tiny data
+    kept_a = sorted(
+        r.id
+        for r in quantile_gate(
+            df, "grp", "v", (1, 4), "id", approx=True
+        ).collect()
+    )
+    assert 5 in kept_a and 6 in kept_a and 1 not in kept_a
+
+
 def test_zorder_key_pinned(spark):
+    from asid_v2_data_pipeline_spark.functions.layout import zorder_key
+
     # 3=011, 5=101 interleaved (bit b of col i at position b*2+i):
     # 0b100111 = 39; order swap gives 0b011011 = 27
     df = spark.createDataFrame([(3, 5)], "a long, b long")
@@ -47,8 +1093,809 @@ def test_zorder_key_pinned(spark):
         zorder_key([F.col("b"), F.col("a")], bits=3).alias("zr"),
     ).first()
     assert (r.z, r.zr) == (39, 27)
+    import pytest as _pt
 
-    with pytest.raises(ValueError):
+    with _pt.raises(ValueError):
         zorder_key([F.col("a")], bits=3)
-    with pytest.raises(ValueError):
+    with _pt.raises(ValueError):
         zorder_key([F.col("a"), F.col("b")], bits=32)
+
+
+def test_write_zordered_files_are_spatially_tight(spark, tmp_path):
+    import glob
+    import os
+
+    from asid_v2_data_pipeline_spark.functions.layout import write_zordered
+
+    # 16x16 grid into 4 files: the z-curve tiles power-of-2 grids into
+    # quadrants, so each file's (i,j) bounding box ~= its row count —
+    # a single-dimension sort would give boxes 4x the row count
+    grid = spark.range(256).select(
+        (F.col("id") % 16).alias("i"), (F.col("id") / 16).cast("long").alias("j")
+    )
+    out = str(tmp_path / "zordered")
+    write_zordered(grid, out, ["i", "j"], bits=4, num_files=4)
+    files = glob.glob(os.path.join(out, "part-*.parquet"))
+    assert len(files) == 4
+    for f in files:
+        pf = spark.read.parquet(f)
+        row = pf.agg(
+            F.min("i"), F.max("i"), F.min("j"), F.max("j"), F.count("*")
+        ).first()
+        area = (row[1] - row[0] + 1) * (row[3] - row[2] + 1)
+        assert area <= 2 * row[4], (f, area, row[4])
+
+
+def test_weighted_sample_proportionality(spark):
+    """A-ES draws ∝ weight: with half the rows at weight 9 and half at 1,
+    a k=200-of-1000 sample must be dominated by the heavy class (expected
+    heavy share ≈ 90 % of draws early on; assert a loose floor, exact
+    determinism is covered by the oracle)."""
+    from pyspark.sql import functions as F
+
+    from asid_v2_data_pipeline_spark.operators.sampling import weighted_sample
+
+    df = spark.range(1000).select(
+        F.col("id").alias("doc_id"),
+        F.when(F.col("id") % 2 == 0, 9.0).otherwise(1.0).alias("w"),
+    )
+    s = weighted_sample(df, "w", 200, "doc_id")
+    heavy = s.filter(F.col("w") == 9.0).count()
+    assert heavy >= 150  # ~180 expected; uniform sampling would give ~100
+    # deterministic across invocations
+    ids1 = sorted(r["doc_id"] for r in s.collect())
+    ids2 = sorted(r["doc_id"] for r in weighted_sample(df, "w", 200, "doc_id").collect())
+    assert ids1 == ids2
+
+
+def test_ivf_index_persisted_pruned_and_equal(spark, tmp_path):
+    """Round-5: the persisted cell-partitioned IVF index (a) prunes the
+    approximate scan to the probed cells' partition files and (b) returns
+    exactly the in-memory topk_cosine_ivf_adc rows."""
+    import numpy as np
+
+    rng = np.random.RandomState(29)
+    dim = 16
+    rows = []
+    for vid in range(240):
+        v = rng.randn(dim)
+        rows.append((vid, [float(x) for x in v / np.linalg.norm(v)]))
+    e = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    q = e.filter(F.col("vec_id") < 6)
+    cents = sim.train_centroids_kmeans(e, 6, iters=3)
+    path = str(tmp_path / "ivf")
+    sim.write_ivf_index(e, cents, path)
+
+    # (a) pruning evidence: the probed-cell filter actually scans
+    # strictly fewer partition files (the _metadata.file_path hidden
+    # column reflects the files read AFTER partition pruning, unlike
+    # inputFiles() which lists the whole relation)
+    q2 = e.filter(F.col("vec_id") < 2)  # few queries -> few probed cells
+    qcells = sim._query_cells(q2, cents, 1, "vec_id", "embedding")
+    probed = {r["cell"] for r in qcells.select("cell").distinct().collect()}
+    idx = sim.read_ivf_index(spark, path)
+
+    def scanned(df):
+        return {
+            r["f"]
+            for r in df.select(
+                F.col("_metadata.file_path").alias("f")
+            ).distinct().collect()
+        }
+
+    all_files = scanned(idx)
+    pruned = idx.filter(F.col("cell").isin(sorted(probed)))
+    pruned_files = scanned(pruned)
+    assert pruned_files and pruned_files < all_files
+    assert all(
+        any(f"cell={c}/" in f for c in probed) for f in pruned_files
+    ), pruned_files
+    n_cells = idx.select("cell").distinct().count()
+    assert len(probed) < n_cells  # the filter actually prunes
+
+    # self-describing: the stored centroid table equals what we built
+    assert sim.read_ivf_centroids(spark, path) == sorted(
+        (cid, list(cv)) for cid, cv in cents
+    )
+
+    # (b) equality with the in-memory two-stage path
+    mem = sorted(
+        map(
+            tuple,
+            sim.topk_cosine_ivf_adc(e, q, cents, k=5, nprobe=2)
+            .withColumn("score", F.round("score", 9))
+            .collect(),
+        )
+    )
+    via_idx = sorted(
+        map(
+            tuple,
+            sim.topk_cosine_ivf_adc_indexed(
+                spark, path, q, k=5, nprobe=2  # centroids from the index
+            )
+            .withColumn("score", F.round("score", 9))
+            .collect(),
+        )
+    )
+    assert mem == via_idx
+
+
+def test_ivf_assign_array_form_equals_staged(spark):
+    """Round-5: the large-K array-of-structs assignment form returns the
+    identical (vec_id, cell) assignment as the staged chained-CASE form
+    at K=16, including duplicate-vector ties (lowest centroid id)."""
+    import numpy as np
+
+    rng = np.random.RandomState(31)
+    rows = []
+    for vid in range(150):
+        v = rng.randn(12)
+        rows.append((vid, [float(x) for x in v / np.linalg.norm(v)]))
+    rows.append((900, rows[0][1]))  # duplicate: exercises tie-break
+    e = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    cents = sim.train_centroids_kmeans(e, 16, iters=2)
+    a = sorted(
+        (r["vec_id"], r["cell"])
+        for r in sim.ivf_assign(e, cents, form="staged").collect()
+    )
+    b = sorted(
+        (r["vec_id"], r["cell"])
+        for r in sim.ivf_assign(e, cents, form="array").collect()
+    )
+    assert a == b
+    c = sorted(
+        (r["vec_id"], r["cell"])
+        for r in sim.ivf_assign(e, cents, form="pandas").collect()
+    )
+    assert a == c
+
+
+def test_ivf_assign_k512_completes_with_sane_plan(spark):
+    """K=512 assignment (past the literal-inlining threshold) completes,
+    matches the NumPy argmax oracle, and auto-dispatches to the flat
+    array form — the plan carries no 512-deep CASE WHEN chain."""
+    import numpy as np
+
+    rng = np.random.RandomState(37)
+    dim, k = 8, 512
+    cents = []
+    for cid in range(k):
+        c = rng.randn(dim)
+        cents.append((cid, [float(x) for x in c / np.linalg.norm(c)]))
+    rows = []
+    for vid in range(40):
+        v = rng.randn(dim)
+        rows.append((vid, [float(x) for x in v / np.linalg.norm(v)]))
+    e = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+
+    got = {
+        r["vec_id"]: r["cell"] for r in sim.ivf_assign(e, cents).collect()
+    }
+    C = np.array([c for _, c in cents])
+    for vid, vec in rows:
+        want = int(np.argmax(C @ np.array(vec)))
+        assert got[vid] == want, (vid, got[vid], want)
+
+    plan = sim.ivf_assign(e, cents)._jdf.queryExecution().optimizedPlan().toString()
+    assert "CASE WHEN" not in plan
+
+
+def test_leakage_safe_split_invariants(spark):
+    """The leakage guard's contract: (a) every near-dup cluster lands
+    entirely on one side; (b) both sides are non-empty at 20%; (c) known
+    near-dup pairs never straddle."""
+    from asid_v2_data_pipeline_spark.schemas import load_table
+    from asid_v2_data_pipeline_spark.operators.split import (
+        leakage_safe_split,
+    )
+
+    d = load_table(spark, "/root/testdata/sf0.001", "documents")
+    s = leakage_safe_split(d, val_pct=20, seed=23)
+    straddling = (
+        s.groupBy("cluster_id")
+        .agg(F.countDistinct("split").alias("k"))
+        .filter(F.col("k") > 1)
+        .count()
+    )
+    assert straddling == 0
+    sides = {r["split"]: r["n"] for r in s.groupBy("split").agg(F.count(F.lit(1)).alias("n")).collect()}
+    assert sides.get("val", 0) > 0 and sides.get("train", 0) > 0
+    assert s.count() == d.count()  # total coverage, no dupes
+    # (c) a known near-dup pair (from the LSH pairs) shares a side
+    pairs = dd.minhash_lsh_pairs(d, "doc_id", "text")
+    sp = {r["doc_id"]: r["split"] for r in s.collect()}
+    checked = 0
+    for r in pairs.limit(50).collect():
+        assert sp[r["id_a"]] == sp[r["id_b"]]
+        checked += 1
+    assert checked > 0
+
+
+def test_bigram_lm_prefers_target_like_text(spark):
+    """The hashed bigram LM must score a doc built from target bigrams
+    above a doc with out-of-vocabulary bigrams."""
+    from asid_v2_data_pipeline_spark.operators.selection import (
+        bigram_lm_scores,
+    )
+
+    schema = "doc_id long, text string"
+    target = spark.createDataFrame(
+        [
+            (100, "the model trains on clean data every day"),
+            (101, "clean data trains the model well"),
+        ],
+        schema,
+    )
+    corpus = spark.createDataFrame(
+        [
+            (1, "the model trains on clean data"),  # in-distribution
+            (2, "zzq qqx wvv bbn mmk ppl"),  # OOV bigrams
+        ],
+        schema,
+    )
+    got = {
+        r["doc_id"]: r["ll"] / r["n_bigrams"]
+        for r in bigram_lm_scores(corpus, target).collect()
+    }
+    assert got[1] > got[2]
+
+
+def test_ivf_index_incremental_append_equals_rebuild(spark, tmp_path):
+    """Round-5: appending a batch into the persisted IVF index (frozen
+    quantizer, touched-cell parquet append) yields the identical query
+    results as rebuilding the index over the union."""
+    import numpy as np
+
+    rng = np.random.RandomState(41)
+
+    def vecs(ids):
+        out = []
+        for vid in ids:
+            v = rng.randn(12)
+            out.append((vid, [float(x) for x in v / np.linalg.norm(v)]))
+        return out
+
+    base_rows = vecs(range(150))
+    new_rows = vecs(range(500, 560))
+    base = spark.createDataFrame(
+        base_rows, "vec_id long, embedding array<double>"
+    )
+    new = spark.createDataFrame(
+        new_rows, "vec_id long, embedding array<double>"
+    )
+    cents = sim.train_centroids_kmeans(base, 5, iters=2)
+
+    inc_path = str(tmp_path / "inc")
+    sim.write_ivf_index(base, cents, inc_path)
+    stats = sim.append_ivf_index(spark, new, inc_path)
+    assert stats["appended"] == 60 and stats["touched_cells"] >= 1
+
+    full_path = str(tmp_path / "full")
+    sim.write_ivf_index(base.unionByName(new), cents, full_path)
+
+    q = base.filter(F.col("vec_id") < 5)
+    a = sorted(
+        map(
+            tuple,
+            sim.topk_cosine_ivf_adc_indexed(spark, inc_path, q, k=5, nprobe=3)
+            .withColumn("score", F.round("score", 9))
+            .collect(),
+        )
+    )
+    b = sorted(
+        map(
+            tuple,
+            sim.topk_cosine_ivf_adc_indexed(spark, full_path, q, k=5, nprobe=3)
+            .withColumn("score", F.round("score", 9))
+            .collect(),
+        )
+    )
+    assert a == b
+    # appended rows are findable: a query vector from the new batch
+    # returns neighbors including other new-batch ids when they're close
+    assert sim.read_ivf_index(spark, inc_path).count() == 210
+
+
+def test_streaming_ivf_index_equals_rebuild_and_replay_idempotent(
+    spark, tmp_path
+):
+    """Round-5 streaming ANN maintenance: draining embedding files into
+    the persisted IVF index equals a full rebuild over the union, and
+    replaying a batch (at-least-once delivery) converges to the same
+    index (dynamic (cell,_bid) overwrite)."""
+    import numpy as np
+
+    from asid_v2_data_pipeline_spark.streaming.ann_stream import (
+        index_vector_stream,
+    )
+
+    rng = np.random.RandomState(47)
+
+    def vecs(ids):
+        out = []
+        for vid in ids:
+            v = rng.randn(10)
+            out.append((vid, [float(x) for x in v / np.linalg.norm(v)]))
+        return out
+
+    schema = "vec_id long, embedding array<double>"
+    base = spark.createDataFrame(vecs(range(120)), schema)
+    b1 = spark.createDataFrame(vecs(range(500, 530)), schema)
+    b2 = spark.createDataFrame(vecs(range(600, 640)), schema)
+    cents = sim.train_centroids_kmeans(base, 4, iters=2)
+
+    inc = str(tmp_path / "idx")
+    sim.write_ivf_index(base, cents, inc)
+    feed = tmp_path / "feed"
+    b1.coalesce(1).write.parquet(str(feed / "f1"))
+    b2.coalesce(1).write.parquet(str(feed / "f2"))
+    q = index_vector_stream(
+        spark,
+        str(feed) + "/*",
+        schema,
+        inc,
+        str(tmp_path / "ckpt"),
+    )
+    q.awaitTermination(120)
+
+    full = str(tmp_path / "full")
+    sim.write_ivf_index(
+        base.unionByName(b1).unionByName(b2), cents, full
+    )
+    probe = base.filter(F.col("vec_id") < 5)
+
+    def topk(path):
+        return sorted(
+            map(
+                tuple,
+                sim.topk_cosine_ivf_adc_indexed(
+                    spark, path, probe, k=5, nprobe=4
+                )
+                .withColumn("score", F.round("score", 9))
+                .collect(),
+            )
+        )
+
+    assert topk(inc) == topk(full)
+
+    # replay batch 1 manually (at-least-once): the index must not grow
+    n_before = sim.read_ivf_index(spark, inc).count()
+    sim.append_ivf_index(spark, b2, inc, batch_id=1)
+    assert sim.read_ivf_index(spark, inc).count() == n_before
+    assert topk(inc) == topk(full)
+
+
+def test_select_to_token_budget_invariants(spark):
+    """Budget semantics: every group's kept token total fits its
+    budget, the greedy prefix is maximal (next-ranked doc would
+    overflow), and unbudgeted groups drop."""
+    from asid_v2_data_pipeline_spark.schemas import load_table
+    from asid_v2_data_pipeline_spark.operators.sampling import (
+        select_to_token_budget,
+    )
+
+    d = load_table(spark, "/root/testdata/sf0.001", "documents")
+    budgets = {"en": 2000, "de": 900}
+    out = select_to_token_budget(d, "lang", budgets).collect()
+    by_lang = {}
+    for r in out:
+        by_lang.setdefault(r["lang"], []).append(r)
+    assert set(by_lang) <= set(budgets)  # e.g. fr/es/zh dropped
+    for lang, rows in by_lang.items():
+        total = sum(r["n_tokens"] for r in rows)
+        assert total <= budgets[lang]
+        assert max(r["cum_tokens"] for r in rows) == total
+    # maximality: rerun with a budget one token larger than the kept
+    # total; the same prefix must still be the answer unless a doc fits
+    en_total = sum(r["n_tokens"] for r in by_lang["en"])
+    bigger = select_to_token_budget(
+        d, "lang", {"en": en_total}, seed=31
+    ).filter(F.col("lang") == "en")
+    assert bigger.count() == len(by_lang["en"])
+
+
+def test_ivf_pq_recall_and_exact_roundtrip(spark):
+    """IVF-PQ (m-byte codes, reconstruction-scored, float re-rank):
+    recall >= 0.9 vs the float IVF path at the same nprobe on the
+    planted-neighbor harness; codes are exactly m small ints; and when
+    every corpus vector IS a codeword concat (corpus built from the
+    codebooks), encode->decode reproduces it exactly."""
+    import numpy as np
+
+    rng = np.random.RandomState(29)
+    dim, n_q, n_nb = 16, 10, 5
+    rows, vid = [], 1000
+    for qi in range(n_q):
+        qv = rng.randn(dim)
+        qv /= np.linalg.norm(qv)
+        rows.append((qi, [float(x) for x in qv]))
+        for _ in range(n_nb):
+            nb = qv + 0.05 * rng.randn(dim)
+            nb /= np.linalg.norm(nb)
+            rows.append((vid, [float(x) for x in nb]))
+            vid += 1
+    for _ in range(200):
+        v = rng.randn(dim)
+        rows.append((vid, [float(x) for x in v / np.linalg.norm(v)]))
+        vid += 1
+    e = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    q = e.filter(F.col("vec_id") < n_q)
+    cents = sim.train_centroids_kmeans(e, 4, iters=3)
+    books = sim.train_pq_codebooks_lite(e, m=4, ks=16)
+
+    flt = {
+        (r["q_id"], r["c_id"])
+        for r in sim.topk_cosine_ivf(e, q, cents, k=5, nprobe=2).collect()
+    }
+    pq = {
+        (r["q_id"], r["c_id"])
+        for r in sim.topk_cosine_ivf_pq(
+            e, q, cents, books, k=5, nprobe=2, rerank_factor=8
+        ).collect()
+    }
+    recall = len(pq & flt) / len(flt)
+    assert recall >= 0.9, f"PQ recall vs float IVF = {recall}"
+
+    # codes are m ints in [0, ks)
+    coded = sim.with_pq_codes(e.limit(20), books).select("_pq").collect()
+    for r in coded:
+        assert len(r["_pq"]) == 4
+        assert all(0 <= c < 16 for c in r["_pq"])
+
+    # exactness: vectors assembled from codewords reconstruct exactly
+    sub = len(books[0][0][1])
+    synth = [
+        (int(i), books[0][i % 16][1] + books[1][(i * 3) % 16][1]
+         + books[2][(i * 5) % 16][1] + books[3][(i * 7) % 16][1])
+        for i in range(12)
+    ]
+    s = spark.createDataFrame(synth, "vec_id long, embedding array<double>")
+    dec = sim.with_pq_codes(s, books).select(
+        "vec_id",
+        "embedding",
+        sim.pq_decode(F.col("_pq"), books).alias("_vhat"),
+    )
+    bad = dec.filter(F.col("embedding") != F.col("_vhat")).count()
+    assert bad == 0 and sub == 4
+
+
+def test_ivf_pq_indexed_equals_memory_and_append_keeps_tier(spark, tmp_path):
+    """The persisted PQ tier: indexed query equals the in-memory IVF-PQ
+    path; the approximate scan's read schema carries the m-int code
+    column, NOT the float vector (the 16x IO claim); and appends encode
+    with the stored codebooks so appended rows stay PQ-queryable."""
+    import numpy as np
+
+    rng = np.random.RandomState(37)
+    dim = 16
+    rows = []
+    for vid in range(200):
+        v = rng.randn(dim)
+        rows.append((vid, [float(x) for x in v / np.linalg.norm(v)]))
+    e = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    q = e.filter(F.col("vec_id") < 5)
+    cents = sim.train_centroids_kmeans(e, 4, iters=3)
+    books = sim.train_pq_codebooks_lite(e, m=4, ks=16)
+    path = str(tmp_path / "ivfpq")
+    sim.write_ivf_index(e, cents, path, pq_codebooks=books)
+
+    assert sim.read_pq_codebooks(spark, path) == [
+        sorted((j, [float(x) for x in cw]) for j, cw in book) for book in books
+    ]
+
+    mem = sorted(
+        map(
+            tuple,
+            sim.topk_cosine_ivf_pq(e, q, cents, books, k=5, nprobe=2)
+            .withColumn("score", F.round("score", 9))
+            .collect(),
+        )
+    )
+    via_idx = sorted(
+        map(
+            tuple,
+            sim.topk_cosine_ivf_pq_indexed(spark, path, q, k=5, nprobe=2)
+            .withColumn("score", F.round("score", 9))
+            .collect(),
+        )
+    )
+    assert mem == via_idx
+
+    # the approximate stage's parquet scan reads _pq, not the vector:
+    # column pruning must reach the cells scan (rescore reads the vector
+    # through a SEPARATE scan of the same table — assert the codes-side
+    # ReadSchema specifically)
+    plan = (
+        sim.topk_cosine_ivf_pq_indexed(spark, path, q, k=5, nprobe=2)
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    import re
+
+    schemas = re.findall(r"ReadSchema: struct<([^>]*)>", plan)
+    code_scans = [s for s in schemas if "_pq" in s]
+    assert code_scans and all("embedding" not in s for s in code_scans)
+
+    # append keeps the PQ tier queryable
+    rows2 = []
+    for vid in range(1000, 1040):
+        v = rng.randn(dim)
+        rows2.append((vid, [float(x) for x in v / np.linalg.norm(v)]))
+    e2 = spark.createDataFrame(rows2, "vec_id long, embedding array<double>")
+    sim.append_ivf_index(spark, e2, path)
+    both = e.unionByName(e2)
+    mem2 = sorted(
+        map(
+            tuple,
+            sim.topk_cosine_ivf_pq(both, q, cents, books, k=5, nprobe=2)
+            .withColumn("score", F.round("score", 9))
+            .collect(),
+        )
+    )
+    via_idx2 = sorted(
+        map(
+            tuple,
+            sim.topk_cosine_ivf_pq_indexed(spark, path, q, k=5, nprobe=2)
+            .withColumn("score", F.round("score", 9))
+            .collect(),
+        )
+    )
+    assert mem2 == via_idx2
+
+
+def test_pq_less_rebuild_retires_stale_codebook_sidecar(spark, tmp_path):
+    """Rebuilding an index WITHOUT a PQ tier at a path that previously
+    had one must delete the stale ``pq_codebooks`` sidecar (ADVICE r5):
+    otherwise read_pq_codebooks still reports a tier the fresh cells
+    don't carry, append_ivf_index attaches ``_pq`` to appended
+    partitions only, and the PQ probe silently returns appended rows
+    only (base rows score NULL)."""
+    import numpy as np
+
+    rng = np.random.RandomState(41)
+    dim = 16
+    rows = [
+        (vid, [float(x) for x in rng.randn(dim)]) for vid in range(120)
+    ]
+    e = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    cents = sim.train_centroids_kmeans(e, 4, iters=2)
+    books = sim.train_pq_codebooks_lite(e, m=4, ks=8)
+    path = str(tmp_path / "idx")
+    sim.write_ivf_index(e, cents, path, pq_codebooks=books)
+    assert sim.read_pq_codebooks(spark, path) is not None
+
+    # PQ-less rebuild at the same path fully retires the old tier
+    sim.write_ivf_index(e, cents, path)
+    assert sim.read_pq_codebooks(spark, path) is None
+    with pytest.raises(ValueError, match="no PQ tier"):
+        sim.topk_cosine_ivf_pq_indexed(
+            spark, path, e.filter(F.col("vec_id") < 3), k=5, nprobe=2
+        )
+
+    # appends to the rebuilt index stay schema-consistent (no _pq) and
+    # the ADC path sees base + appended rows alike
+    rows2 = [
+        (vid, [float(x) for x in rng.randn(dim)])
+        for vid in range(1000, 1020)
+    ]
+    e2 = spark.createDataFrame(rows2, "vec_id long, embedding array<double>")
+    sim.append_ivf_index(spark, e2, path)
+    assert "_pq" not in sim.read_ivf_index(spark, path).columns
+    q = e.filter(F.col("vec_id") < 3)
+    both = e.unionByName(e2)
+    mem = sorted(
+        map(
+            tuple,
+            sim.topk_cosine_ivf_adc(both, q, cents, k=5, nprobe=2)
+            .withColumn("score", F.round("score", 9))
+            .collect(),
+        )
+    )
+    via_idx = sorted(
+        map(
+            tuple,
+            sim.topk_cosine_ivf_adc_indexed(spark, path, q, k=5, nprobe=2)
+            .withColumn("score", F.round("score", 9))
+            .collect(),
+        )
+    )
+    assert mem == via_idx
+
+
+def test_token_budget_rejects_non_numeric_ids(spark):
+    """A non-long-castable id must raise, not silently hash to NULL and
+    take the budget prefix (the gumbel_topk guard, applied here too)."""
+    from asid_v2_data_pipeline_spark.operators.sampling import (
+        select_to_token_budget,
+    )
+
+    d = spark.createDataFrame(
+        [("doc-1", "en", "some words here"), ("doc-2", "en", "more words")],
+        "doc_id string, lang string, text string",
+    )
+    with pytest.raises(Exception, match="must be numeric"):
+        select_to_token_budget(d, "lang", {"en": 100}).collect()
+
+
+def test_token_budget_rejects_null_ids(spark):
+    """A literally-NULL id must also raise (NULLs sort FIRST ascending
+    and would silently take the budget prefix)."""
+    from asid_v2_data_pipeline_spark.operators.sampling import (
+        select_to_token_budget,
+    )
+
+    d = spark.createDataFrame(
+        [(1, "en", "some words"), (None, "en", "ghost words")],
+        "doc_id long, lang string, text string",
+    )
+    with pytest.raises(Exception, match="non-NULL"):
+        select_to_token_budget(d, "lang", {"en": 100}).collect()
+
+
+def test_contrastive_triples_are_non_degenerate(spark):
+    """Negatives are never the anchor/positive and never a known
+    near-dup of the anchor, even for a single-pair corpus (which emits
+    nothing rather than a poisoned triple)."""
+    from asid_v2_data_pipeline_spark.queries.dedup_sim import (
+        ds_contrastive_pairs,
+    )
+
+    from asid_v2_data_pipeline_spark.schemas import load_table
+
+    d = load_table(spark, "/root/testdata/sf0.001", "documents")
+    lsh = {
+        (r["id_a"], r["id_b"])
+        for r in dd.minhash_lsh_pairs(d, "doc_id", "text", 16, 4).collect()
+    }
+    rows = ds_contrastive_pairs(spark, "/root/testdata/sf0.001").collect()
+    assert rows
+    for r in rows:
+        assert r["negative"] != r["anchor"]
+        assert r["negative"] != r["positive"]
+        key = (min(r["anchor"], r["negative"]), max(r["anchor"], r["negative"]))
+        assert key not in lsh  # negative is not a near-dup of the anchor
+
+
+def test_trained_pq_codebooks_cut_reconstruction_error(spark):
+    """Per-subspace L2 Lloyd's strictly improves PQ reconstruction MSE
+    over the lite (first-ks-vectors) codebooks on random data, and the
+    trained books keep the IVF-PQ recall floor."""
+    import numpy as np
+
+    rng = np.random.RandomState(41)
+    dim = 16
+    rows = [
+        (vid, [float(x) for x in v / np.linalg.norm(v)])
+        for vid, v in ((i, rng.randn(dim)) for i in range(300))
+    ]
+    e = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+
+    def mse(books):
+        dec = sim.with_pq_codes(e, books).select(
+            "embedding", sim.pq_decode(F.col("_pq"), books).alias("_vhat")
+        )
+        err = dec.select(
+            F.aggregate(
+                F.zip_with(
+                    "embedding", "_vhat", lambda a, b: (a - b) * (a - b)
+                ),
+                F.lit(0.0),
+                lambda acc, v: acc + v,
+            ).alias("e")
+        )
+        return err.agg(F.avg("e")).first()[0]
+
+    lite = sim.train_pq_codebooks_lite(e, m=4, ks=8)
+    trained = sim.train_pq_codebooks_kmeans(e, m=4, ks=8, iters=4)
+    assert mse(trained) < mse(lite) * 0.8, (mse(trained), mse(lite))
+
+    q = e.filter(F.col("vec_id") < 5)
+    cents = sim.train_centroids_kmeans(e, 4, iters=2)
+    exact = {
+        (r["q_id"], r["c_id"]) for r in sim.topk_cosine(e, q, k=5).collect()
+    }
+    pq = {
+        (r["q_id"], r["c_id"])
+        for r in sim.topk_cosine_ivf_pq(
+            e, q, cents, trained, k=5, nprobe=4, rerank_factor=8
+        ).collect()
+    }
+    assert len(pq & exact) / len(exact) >= 0.85
+
+
+def test_bpe_encode_replace_chain_equals_reference_bpe(spark):
+    """The delimiter-replace chain must equal a reference Sennrich-style
+    merge application (all non-overlapping occurrences, ranked order)
+    on every token — including the 'a a a' overlap and cross-symbol
+    false-match traps the delimiters exist to kill."""
+    from asid_v2_data_pipeline_spark.queries.analysis import _BPE_MERGES
+
+    def ref_encode(tok: str) -> list[str]:
+        syms = list(tok)
+        for x, y in _BPE_MERGES:
+            out, i = [], 0
+            while i < len(syms):
+                if i + 1 < len(syms) and syms[i] == x and syms[i + 1] == y:
+                    out.append(x + y)
+                    i += 2
+                else:
+                    out.append(syms[i])
+                    i += 1
+            syms = out
+        return syms
+
+    words = [
+        "that", "the", "thththe", "and", "standing", "tttthhhh",
+        "banana", "onion", "tother", "interesting", "a", "o'clock",
+        "thethethe", "ananan", "estereres",
+    ]
+    df = spark.createDataFrame([(w,) for w in words], "tok string")
+    s = F.concat(
+        F.lit("|"), F.concat_ws("||", F.split(F.col("tok"), "")), F.lit("|")
+    )
+    for x, y in _BPE_MERGES:
+        s = F.replace(s, F.lit(f"|{x}||{y}|"), F.lit(f"|{x}{y}|"))
+    enc = df.select("tok", s.alias("_enc")).select(
+        "tok",
+        F.split(F.expr("trim(BOTH '|' FROM _enc)"), r"\|\|").alias("subs"),
+    )
+    got = {r["tok"]: list(r["subs"]) for r in enc.collect()}
+    for w in words:
+        assert got[w] == ref_encode(w), (w, got[w], ref_encode(w))
+        assert "".join(got[w]) == w  # lossless segmentation
+
+
+def test_media_arrow_batches_are_byte_bounded(spark, tmp_path, monkeypatch):
+    """VERDICT r10 task 5: maxRecordsPerBatch caps ROWS, so a corpus
+    of multi-MB payloads could hand the Python worker multi-GB Arrow
+    batches.  The media read derives partition count from actual
+    payload bytes (parquet footers), and an Arrow batch is a subset of
+    one partition — so per-batch bytes stay near the target no matter
+    the row cap.  Probed with oversized synthetic payloads and a
+    shrunk target."""
+    import os
+
+    import numpy as np
+    import pandas as pd
+
+    from asid_v2_data_pipeline_spark.queries import _shared as S
+
+    # 48 docs x ~1 MiB of incompressible payload = ~48 MiB
+    rng = np.random.default_rng(3)
+    pdf = pd.DataFrame(
+        {
+            "media_id": np.arange(48, dtype=np.int64),
+            "payload": [rng.bytes(1 << 20) for _ in range(48)],
+        }
+    )
+    path = str(tmp_path / "media")
+    spark.createDataFrame(pdf).write.parquet(path)
+
+    monkeypatch.setattr(S, "_MEDIA_BATCH_TARGET_BYTES", 4 << 20)
+    media = S._bounded_media_read(spark, path)
+    n_parts = media.rdd.getNumPartitions()
+    assert n_parts >= 12, n_parts  # ~48 MiB / 4 MiB
+
+    def probe(batches):
+        for b in batches:
+            yield pd.DataFrame(
+                {"batch_bytes": [int(sum(len(p) for p in b["payload"]))]}
+            )
+
+    sizes = [
+        r["batch_bytes"]
+        for r in media.mapInPandas(probe, "batch_bytes long").collect()
+    ]
+    assert sum(sizes) == 48 << 20  # every payload arrived exactly once
+    # hash partitioning is near-uniform on dense ids; allow 3x slack
+    # over the 4 MiB target before calling the bound broken
+    assert max(sizes) <= 3 * (4 << 20), sorted(sizes)[-5:]
+
+    # the production target would put this corpus in one partition per
+    # core — the bound only engages when payloads outgrow it
+    monkeypatch.setattr(S, "_MEDIA_BATCH_TARGET_BYTES", 64 << 20)
+    assert (
+        S._bounded_media_read(spark, path).rdd.getNumPartitions()
+        == spark.sparkContext.defaultParallelism
+    )

@@ -1,14 +1,16 @@
-"""Giant-scene stress tests pinning SCALE.md's skew claims: the patch
-path completes correctly under ~400x scene skew, AQE's skew-join split
-demonstrably engages when a scene-keyed join goes sort-merge (runtime
-plan evidence, not prose), and the salted stitch canvas spreads a giant
-scene without changing the reconstruction."""
+"""Salted aggregation / replicated join correctness on a skewed key,
+plus the giant-scene stress tests pinning SCALE.md's skew claims:
+the patch path completes correctly under ~400x scene skew, and AQE's
+skew-join split demonstrably engages when a scene-keyed join goes
+sort-merge (runtime plan evidence, not prose)."""
 
 from __future__ import annotations
 
 import contextlib
 
 from pyspark.sql import functions as F
+
+from asid_v2_data_pipeline_spark.operators.skew import replicated_join, salted_sum
 
 
 def _skewed_scene_pixels(spark, giant_side=320, small_side=32, n_small=4):
@@ -117,6 +119,45 @@ def test_aqe_splits_skewed_scene_join(spark):
     assert n == px.count()
     assert "isFinalPlan=true" in plan
     assert "skew=true" in plan, f"AQE skew split did not engage:\n{plan[:2000]}"
+
+
+def _skewed(spark):
+    # key 'hot' has 10k rows, others 10 each
+    hot = spark.range(10_000).select(
+        F.lit("hot").alias("k"), F.col("id").cast("double").alias("v")
+    )
+    cold = spark.range(10).select(
+        F.concat(F.lit("c"), F.col("id")).alias("k"), F.col("id").cast("double").alias("v")
+    )
+    return hot.unionByName(cold)
+
+
+def test_salted_sum_matches_plain(spark):
+    df = _skewed(spark)
+    plain = {
+        r["k"]: (r["s"], r["n"])
+        for r in df.groupBy("k").agg(F.sum("v").alias("s"), F.count("*").alias("n")).collect()
+    }
+    salted = {
+        r["k"]: (r["sum_v"], r["n"]) for r in salted_sum(df, ["k"], ["v"]).collect()
+    }
+    assert salted == plain
+
+
+def test_replicated_join_matches_plain(spark):
+    fact = _skewed(spark)
+    dim = spark.createDataFrame(
+        [("hot", 1), ("c1", 2), ("c2", 3)], "k string, attr int"
+    )
+    plain = fact.join(dim, "k").groupBy("k").agg(
+        F.count("*").alias("n"), F.sum("attr").alias("s")
+    )
+    salted = replicated_join(fact, dim, "k", salt_buckets=4).groupBy("k").agg(
+        F.count("*").alias("n"), F.sum("attr").alias("s")
+    )
+    a = {r["k"]: (r["n"], r["s"]) for r in plain.collect()}
+    b = {r["k"]: (r["n"], r["s"]) for r in salted.collect()}
+    assert a == b
 
 
 def test_salted_canvas_spreads_giant_scene(spark):

@@ -55,3 +55,42 @@ def test_reconstruction_sink(spark, tmp_path):
     back = spark.read.parquet(out)
     assert back.count() == 3
     assert back.filter(F.col("scene") == "s1").count() == 2
+
+
+def test_sitemap_extraction_strictness(spark):
+    """Sitemap urlset parsing: entity unescape, typed priority, loud
+    failure on a loc-less url or a non-urlset root."""
+    from asid_v2_data_pipeline_spark.operators.multimodal import (
+        extract_sitemap_urls,
+    )
+
+    good = (
+        b'<?xml version="1.0"?><urlset xmlns="ns">'
+        b"<url><loc>https://x/a?b=1&amp;c=2</loc>"
+        b"<lastmod>2026-01-02</lastmod><changefreq>daily</changefreq>"
+        b"<priority>0.7</priority></url>"
+        b"<url><loc>https://x/b</loc></url></urlset>"
+    )
+    rows = extract_sitemap_urls(
+        spark.createDataFrame(
+            [(1, good)], "media_id long, payload binary"
+        )
+    ).collect()
+    assert [(r.uno, r.loc, r.lastmod, r.changefreq, r.priority) for r in rows] == [
+        (0, "https://x/a?b=1&c=2", "2026-01-02", "daily", 0.7),
+        (1, "https://x/b", None, None, None),
+    ]
+    import pytest as _pytest
+
+    for bad in (
+        b"<urlset><url></url></urlset>",  # url without loc
+        b"<sitemapindex></sitemapindex>",  # wrong root
+        b"not xml at all",
+    ):
+        df = extract_sitemap_urls(
+            spark.createDataFrame(
+                [(1, bad)], "media_id long, payload binary"
+            )
+        )
+        with _pytest.raises(Exception):
+            df.collect()
